@@ -25,6 +25,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from read_comp_data_pipeline_spark.schemas import KEY_COLS
+from read_comp_data_pipeline_spark.session import PerJVM
+
+_COLUMNS = PerJVM()
 
 
 def compact_latest(
@@ -61,25 +64,35 @@ def compact_latest(
     Requires ``order_col`` values unique per key (WAL seq is globally
     unique). Output columns match the input.
     """
-    key_cols = key_cols or KEY_COLS
+    key_cols = tuple(key_cols or KEY_COLS)
+    # the Columns are built once per JVM (session.PerJVM): this runs per
+    # epoch on the ingest path and per scan on the MOR read path
+    max_seq = _COLUMNS.get(("max", order_col), lambda: F.max(order_col).alias(order_col))
     if strategy == "broadcast_semi":
-        latest = df.groupBy(*key_cols).agg(F.max(order_col).alias(order_col))
+        latest = df.groupBy(*key_cols).agg(max_seq)
         return df.join(F.broadcast(latest), on=[*key_cols, order_col], how="left_semi")
     if strategy == "broadcast_hash_semi":
-        latest = (
-            df.groupBy(*key_cols)
-            .agg(F.max(order_col).alias(order_col))
-            .select(F.xxhash64(*key_cols, order_col).alias("_h"))
+        h = _COLUMNS.get(
+            ("hash", key_cols, order_col), lambda: F.xxhash64(*key_cols, order_col)
         )
+        latest = df.groupBy(*key_cols).agg(max_seq).select(h.alias("_h"))
         return (
-            df.withColumn("_h", F.xxhash64(*key_cols, order_col))
+            df.withColumn("_h", h)
             .join(F.broadcast(latest), on="_h", how="left_semi")
             .drop("_h")
         )
-    payload = [c for c in df.columns if c not in key_cols]
-    packed = F.struct(*[F.col(c) for c in payload])
-    out = df.groupBy(*key_cols).agg(F.max_by(packed, F.col(order_col)).alias("_p"))
-    return out.select(*key_cols, *[F.col(f"_p.{c}").alias(c) for c in payload])
+    payload = tuple(c for c in df.columns if c not in key_cols)
+
+    def agg_cols():
+        packed = F.struct(*[F.col(c) for c in payload])
+        return (
+            F.max_by(packed, F.col(order_col)).alias("_p"),
+            [F.col(f"_p.{c}").alias(c) for c in payload],
+        )
+
+    latest_row, unpacked = _COLUMNS.get(("agg", key_cols, order_col, payload), agg_cols)
+    out = df.groupBy(*key_cols).agg(latest_row)
+    return out.select(*key_cols, *unpacked)
 
 
 def compact_latest_salted(

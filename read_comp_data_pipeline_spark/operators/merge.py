@@ -77,6 +77,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from read_comp_data_pipeline_spark.schemas import KEY_COLS, MANIFEST_SCHEMA, METRICS_SCHEMA
+from read_comp_data_pipeline_spark.session import PerJVM, observed_or
 
 _CURRENT = "CURRENT"
 _STAGING = "STAGING"
@@ -88,9 +89,17 @@ _STAGING = "STAGING"
 _FOLD_SORT_MAX_ROWS = 1_000_000
 
 
+# per-JVM memos of the Columns the read and write paths apply on every call
+_BUCKET_EXPRS = PerJVM()
+_PROJECTIONS = PerJVM()
+
+
 def bucket_expr(n_buckets: int, key_cols: list[str] | None = None):
-    key_cols = key_cols or KEY_COLS
-    return F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
+    key_cols = tuple(key_cols or KEY_COLS)
+    return _BUCKET_EXPRS.get(
+        (n_buckets, key_cols),
+        lambda: F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int"),
+    )
 
 
 def _globs(dirs: list[str]) -> list[str]:
@@ -162,15 +171,20 @@ def _align(df: DataFrame, schema: T.StructType, keep: tuple[str, ...] = ()) -> D
     files align by field ID instead (:func:`_align_by_id`) so rename and
     drop/re-add are also metadata-only.
     """
+    have = frozenset(df.columns)
+    key = ("name", schema.json(), have, keep)
+    return df.select(*_PROJECTIONS.get(key, lambda: _align_cols(schema, have, keep)))
+
+
+def _align_cols(schema: T.StructType, have: frozenset, keep: tuple[str, ...]) -> list:
     cols = []
-    have = {f.name for f in df.schema.fields}
     for f in schema.fields:
         if f.name in have:
             cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     cols.extend(F.col(k) for k in keep if k in have)
-    return df.select(*cols)
+    return cols
 
 
 def _snap_field_ids(snap: dict[str, Any]) -> tuple[list[list[int]], int]:
@@ -213,8 +227,16 @@ def _align_by_id(
     whichever written column carries the same ID (cast covers widening),
     or null when that ID was absent at write time (column added later, or
     re-added after a drop). Columns whose ID was since dropped are simply
-    not projected. ``keep`` columns (e.g. the sidecar ``op``) map by name.
+    not projected. ``keep`` columns (e.g. the sidecar ``op``) map by name
+    and must be in the scan's schema beside ``written``'s columns.
     """
+    key = ("id", written.json(), tuple(written_ids), cur.json(), tuple(cur_ids), keep)
+    return df.select(*_PROJECTIONS.get(
+        key, lambda: _align_by_id_cols(written, written_ids, cur, cur_ids, keep)
+    ))
+
+
+def _align_by_id_cols(written, written_ids, cur, cur_ids, keep) -> list:
     by_id = {i: f for i, f in zip(written_ids, written.fields)}
     cols = []
     for i, f in zip(cur_ids, cur.fields):
@@ -223,9 +245,8 @@ def _align_by_id(
             cols.append(F.col(src.name).cast(f.dataType).alias(f.name))
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    have = {f.name for f in df.schema.fields}
-    cols.extend(F.col(k) for k in keep if k in have)
-    return df.select(*cols)
+    cols.extend(F.col(k) for k in keep)
+    return cols
 
 
 class HashMergeTable:
@@ -832,12 +853,12 @@ class HashMergeTable:
         if affected_buckets is not None:
             affected = list(affected_buckets)
         else:
-            try:
-                affected = sorted(int(b) for b in (obs.get["_bks"] or []))
-            except Exception:
-                # empty-relation short-circuit plans can leave the metric
-                # unpopulated (same fallback as the quarantine observer)
-                affected = [r["_b"] for r in folded.select("_b").distinct().collect()]
+            # empty-relation short-circuit plans can leave the metric
+            # unpopulated: then one distinct+collect over the checkpoint
+            affected = sorted(int(b) for b in observed_or(
+                obs, "_bks",
+                lambda: [r["_b"] for r in folded.select("_b").distinct().collect()],
+            ) or [])
         if not affected:
             return self._commit_noop(snap, epoch, src_seq_lo, src_seq_hi, t0, pre_commit, stage)
         tgt = self.read(buckets=affected, at_snapshot=snap)
@@ -1117,22 +1138,31 @@ class HashMergeTable:
         key_cols = snap["key_cols"]
         cur_schema = T.StructType.fromJson(snap["schemas"][snap["current_schema_id"]])
         order = snap.get("order_col", "seq")
-        src_keys = src.select(*key_cols, F.col(order).alias("_sseq"))
+
+        def arms():
+            sseq = F.col("_sseq")
+            return (
+                F.col(order).alias("_sseq"),
+                sseq.isNull() | (sseq <= F.col(order)),
+                sseq <= F.col(order),
+                F.col(op_col) != "D",
+            )
+
+        src_seq, tgt_kept, tgt_won, upsert = _PROJECTIONS.get(("cow", order, op_col), arms)
+        src_keys = src.select(*key_cols, src_seq)
         tgt = self.read(buckets=affected, at_snapshot=snap)
         kept = (
             tgt.join(hint(src_keys), on=key_cols, how="left")
-            .where(F.col("_sseq").isNull() | (F.col("_sseq") <= F.col(order)))
+            .where(tgt_kept)
             .drop("_sseq")
         )
         tgt_wins = (
             tgt.join(hint(src_keys), on=key_cols, how="inner")
-            .where(F.col("_sseq") <= F.col(order))
+            .where(tgt_won)
             .select(*key_cols)
         )
         applied = _align(
-            src.where(F.col(op_col) != "D").join(
-                hint(tgt_wins), on=key_cols, how="left_anti"
-            ),
+            src.where(upsert).join(hint(tgt_wins), on=key_cols, how="left_anti"),
             cur_schema,
         )
         return (

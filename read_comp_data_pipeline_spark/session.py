@@ -23,6 +23,8 @@ The confs below are the scale knobs the engine relies on (SURVEY.md §4):
 from __future__ import annotations
 
 import os
+import threading
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
@@ -91,3 +93,62 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+class PerJVM:
+    """Memo for plan pieces (Columns, schemas) built once per live JVM.
+
+    A PySpark Column is an unresolved JVM expression: it can be applied to
+    any DataFrame, but building one costs py4j round trips per node (a
+    ``cast`` to a DataType alone looks up the active session each time).
+    Plan builders that run every epoch fetch their pieces from here
+    instead; callers must not mutate what they get. Entries are JVM
+    handles, so the memo belongs to the gateway it was filled under: when
+    ``SparkContext._gateway`` changes (a shutdown and restart in the same
+    Python process) it empties itself rather than hand out dead
+    JavaObjects. The oldest entry is dropped past ``maxsize``, so many
+    schemas over a long process stay bounded. Safe to share between
+    driver threads; ``build`` runs outside the lock, so two threads
+    missing the same key may both build it.
+    """
+
+    maxsize = 256
+
+    def __init__(self):
+        self._memo: dict = {}
+        self._gateway: Any = None
+        self._lock = threading.Lock()
+
+    def get(self, key, build: Callable[[], Any]) -> Any:
+        from pyspark import SparkContext
+
+        gw = SparkContext._gateway
+        with self._lock:
+            if gw is not self._gateway:
+                self._memo.clear()
+                self._gateway = gw
+            elif key in self._memo:
+                return self._memo[key]
+        value = build()
+        with self._lock:
+            if gw is self._gateway:
+                if key not in self._memo and len(self._memo) >= self.maxsize:
+                    del self._memo[next(iter(self._memo))]
+                self._memo[key] = value
+        return value
+
+
+def observed_or(obs, key: str, fallback: Callable[[], Any]) -> Any:
+    """Metric ``key`` of an ``Observation`` if an action has already filled
+    it, else ``fallback()``. Never blocks: ``Observation.get`` waits until
+    some action consumes the observed lineage, which may never happen (an
+    empty source list, a short-circuited plan), so the filled row is
+    checked first. Spark 4.1's row conversion can also assert on the
+    metrics row an empty-relation plan produces; that falls back too."""
+    jo = getattr(obs, "_jo", None)
+    try:
+        if jo is not None and not jo.getRowOrEmpty().isEmpty():
+            return obs.get[key]
+    except Exception:
+        pass
+    return fallback()

@@ -17,14 +17,22 @@ in the ingest loop is pure partition pruning (no full-log scan).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from read_comp_data_pipeline_spark.schemas import WAL_SCHEMA
+from read_comp_data_pipeline_spark.session import PerJVM
+
+# the Spark schema each footer schema infers to (read_epoch)
+_EPOCH_SCHEMAS = PerJVM()
+# footer key where Spark records the schema it wrote; inference prefers it
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 # Vocabulary for synthetic content. Includes the reference's 13 classifier
 # terms (search_scrape.py:1088-1102) so the keyword classifier (P5) and the
-# extraction UDF (W1) have real work on generated content.
+# extraction (W1) have real work on generated content.
 _KEYWORDS = [
     "law", "legal", "statute", "legislative", "judicial", "legislation",
     "legislature", "government", "court", "due process", "jurisprudence",
@@ -194,19 +202,35 @@ def write_wal(df: DataFrame, path: str, row_group_mb: int = 8) -> None:
     )
 
 
-def read_epoch(spark: SparkSession, path: str, epoch: int) -> DataFrame:
+def read_epoch(
+    spark: SparkSession, path: str, epoch: int, footers: EpochFooters | None = None
+) -> DataFrame:
     """Bounded micro-batch read of one epoch (Trigger.AvailableNow-style).
 
     Reads the epoch's partition directory directly — pruning by
-    construction — and infers the schema from that epoch's own files, so a
-    WAL whose later epochs carry evolved columns (FIXTURES.md §3) presents
-    each slice with its native schema (the ingest loop evolves the target
-    transactionally before applying it).
+    construction — with that epoch's own schema, so a WAL whose later
+    epochs carry evolved columns (FIXTURES.md §3) presents each slice with
+    its native schema (the ingest loop evolves the target transactionally
+    before applying it).
+
+    The schema is Spark's inference over the epoch's files, run once per
+    distinct footer schema (``footers``, from :func:`epoch_footers`; read
+    here when not given) and then handed to the reader; an epoch whose
+    files disagree on their schema is inferred every time.
     """
     import os
 
     edir = os.path.join(path, f"epoch={epoch}")
-    return spark.read.parquet(edir).withColumn("epoch", F.lit(epoch).cast("long"))
+    if footers is None:
+        footers = epoch_footers(path, epoch)
+    if footers.schema is None:
+        df = spark.read.parquet(edir)
+    else:
+        schema = _EPOCH_SCHEMAS.get(
+            footers.schema, lambda: spark.read.parquet(edir).schema
+        )
+        df = spark.read.schema(schema).parquet(edir)
+    return df.withColumn("epoch", F.lit(epoch).cast("long"))
 
 
 def max_epoch(spark: SparkSession, path: str) -> int:
@@ -220,17 +244,21 @@ def max_epoch(spark: SparkSession, path: str) -> int:
     return max(epochs) if epochs else -1
 
 
-def epoch_stats(path: str, epoch: int) -> tuple[int | None, int | None, int, int]:
-    """(seq_lo, seq_hi, n_events, n_read_units) for one epoch partition,
-    from parquet footers via pyarrow — statistics only, no Spark job, no
-    data read. The WAL's epoch dirs are its manifest.
+class EpochFooters(NamedTuple):
+    """What one epoch's parquet footers say, read without Spark."""
 
-    ``n_read_units`` = total row groups: the hard ceiling on scan
-    parallelism (Spark assigns a row group to exactly one task, whatever
-    maxPartitionBytes says). The ingest loop uses it to decide whether the
-    expensive extraction stage needs a repartition to reach full cluster
-    parallelism (a coarse WAL epoch of a few big single-row-group files
-    would otherwise bind the UDF stage to its file layout)."""
+    seq_lo: int | None
+    seq_hi: int | None
+    n_events: int
+    n_read_units: int
+    # the files' common footer schema (parquet schema + Spark's row
+    # metadata), or None when the files disagree or there are none
+    schema: tuple[str, bytes | None] | None
+
+
+def epoch_footers(path: str, epoch: int) -> EpochFooters:
+    """Footer statistics and schema of one epoch partition via pyarrow —
+    no Spark job, no data read. The WAL's epoch dirs are its manifest."""
     import os
 
     import pyarrow.parquet as pq
@@ -240,21 +268,38 @@ def epoch_stats(path: str, epoch: int) -> tuple[int | None, int | None, int, int
     hi: int | None = None
     n = 0
     units = 0
+    schemas = set()
     if not os.path.isdir(edir):
-        return None, None, 0, 0
+        return EpochFooters(None, None, 0, 0, None)
     for f in os.listdir(edir):
         if not f.endswith(".parquet"):
             continue
         md = pq.ParquetFile(os.path.join(edir, f)).metadata
         n += md.num_rows
         units += md.num_row_groups
+        # the schema's text without its first line (a Python object address)
+        text = str(md.schema).partition("\n")[2]
+        schemas.add((text, (md.metadata or {}).get(_SPARK_ROW_METADATA)))
         seq_idx = {md.schema.column(i).name: i for i in range(md.num_columns)}["seq"]
         for rg in range(md.num_row_groups):
             st = md.row_group(rg).column(seq_idx).statistics
             if st is not None and st.has_min_max:
                 lo = st.min if lo is None else min(lo, st.min)
                 hi = st.max if hi is None else max(hi, st.max)
-    return lo, hi, n, units
+    return EpochFooters(lo, hi, n, units, schemas.pop() if len(schemas) == 1 else None)
+
+
+def epoch_stats(path: str, epoch: int) -> tuple[int | None, int | None, int, int]:
+    """(seq_lo, seq_hi, n_events, n_read_units) for one epoch partition,
+    from its parquet footers (:func:`epoch_footers`).
+
+    ``n_read_units`` = total row groups: the hard ceiling on scan
+    parallelism (Spark assigns a row group to exactly one task, whatever
+    maxPartitionBytes says). The ingest loop uses it to decide whether the
+    expensive extraction stage needs a repartition to reach full cluster
+    parallelism (a coarse WAL epoch of a few big single-row-group files
+    would otherwise bind the extraction stage to its file layout)."""
+    return epoch_footers(path, epoch)[:4]
 
 
 def expected_final_state(wal: DataFrame) -> DataFrame:

@@ -3,14 +3,13 @@
 This is the engine's replacement for the reference's main crawl loop
 (``/root/reference/search_scrape.py:932-1366``): pop-one-URL becomes a
 bounded epoch read, the seen-set check becomes the MERGE key match, the
-per-page extraction becomes a vectorized UDF over the whole batch, and the
-hourly checkpoint (``:316-321``) becomes an atomic per-epoch snapshot
-commit — so kill-and-resume replays converge to the identical final table
-(north_rule; tests/test_ingest.py).
+per-page extraction becomes JVM Column expressions over the whole batch,
+and the hourly checkpoint (``:316-321``) becomes an atomic per-epoch
+snapshot commit — so kill-and-resume replays converge to the identical
+final table (north_rule; tests/test_ingest.py).
 
-Deliberate dataflow shape (SURVEY §4): compaction runs BEFORE the
-extraction UDF — Catalyst cannot push a filter through an opaque UDF, so
-the engine discards superseded events first and parses only the ≤1
+Deliberate dataflow shape (SURVEY §4): compaction runs BEFORE extraction,
+so the engine discards superseded events first and parses only the ≤1
 surviving row per key.
 """
 
@@ -20,7 +19,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from read_comp_data_pipeline_spark.functions.extract import (
@@ -31,6 +30,7 @@ from read_comp_data_pipeline_spark.functions.extract import (
 from read_comp_data_pipeline_spark.operators.compact import compact_latest
 from read_comp_data_pipeline_spark.operators.merge import HashMergeTable
 from read_comp_data_pipeline_spark.schemas import TARGET_SCHEMA
+from read_comp_data_pipeline_spark.session import PerJVM, observed_or
 from read_comp_data_pipeline_spark.sources import wal as wal_src
 from read_comp_data_pipeline_spark.streaming.evolve import ensure_evolved
 
@@ -46,14 +46,30 @@ def prepare_target_rows(slice_df: DataFrame, enrich: bool = True) -> DataFrame:
     ``enrich`` adds the per-document analysis columns a training-data
     pipeline computes at ingest (the reference ran its 13-term classifier on
     every page, search_scrape.py:1088-1106): keyword hit count, quality
-    score, token count, normalized fingerprint. All JVM Column expressions.
+    score, token count, normalized fingerprint. All JVM Column expressions,
+    built once per JVM (:func:`_extraction_layers`) and applied as three
+    ``withColumns`` projections.
     """
+    out = slice_df
+    for layer in _LAYERS.get(enrich, lambda: _extraction_layers(enrich)):
+        out = out.withColumns(layer)
+    return out
+
+
+_LAYERS = PerJVM()
+
+
+def _extraction_layers(enrich: bool) -> tuple[dict[str, Column], ...]:
+    """The extraction Columns, grouped by what they read: each layer
+    references only columns of the layer before it, so one
+    ``withColumns`` per layer builds the same plan as one ``withColumn``
+    per column, with 3 analysis passes instead of 8."""
     from read_comp_data_pipeline_spark.functions.classify import keyword_hits
 
     is_del = F.col("op") == "D"
-    df = slice_df.withColumn(
-        "title", F.when(is_del, F.lit(None)).otherwise(title_expr(F.col("content"), F.col("path")))
-    )
+    live = lambda c: F.when(is_del, F.lit(None)).otherwise(c)  # noqa: E731
+    content = F.col("content")
+    title = {"title": live(title_expr(content, F.col("path")))}
     # O(prefix) lead-section scan as pure JVM expressions: only the first
     # (heading, text) pair is stored, so the scan stops at the first header
     # marker instead of walking the whole document — and the epoch's
@@ -61,52 +77,52 @@ def prepare_target_rows(slice_df: DataFrame, enrich: bool = True) -> DataFrame:
     # UDF this replaces shipped it through Arrow both ways and looped rows
     # in Python; functions/extract.first_section_exprs carries the
     # equivalence argument, property-tested against the UDF)
-    h1, t1 = first_section_exprs(F.col("title"), F.col("content"))
-    df = (
-        df.withColumn("heading", F.when(~is_del, h1))
-        .withColumn("text", F.when(~is_del, t1))
-        .withColumn("content_sha", F.when(is_del, F.lit(None)).otherwise(content_sha_expr(F.col("content"))))
+    h1, t1 = first_section_exprs(F.col("title"), content)
+    sections = {
+        "heading": F.when(~is_del, h1),
+        "text": F.when(~is_del, t1),
+        "content_sha": live(content_sha_expr(content)),
+    }
+    if not enrich:
+        return title, sections
+    # ingest-grade variants: constant passes over the content, no
+    # array-materializing regexes (operators/textstats.py keeps the
+    # full-fidelity versions for the analysis catalog — at 10^6+ rows
+    # per epoch, regexp_extract_all's per-row token arrays are pure GC
+    # pressure the hot path can't afford)
+    #
+    # replace-then-length beats split-size HERE despite losing an
+    # isolated microbench: split materializes a per-row array of token
+    # substrings, and inside the already allocation-heavy extraction
+    # projection that extra garbage cost more than replace's single
+    # copy (measured: MOR replay 11.6s -> 17.5s with split-size)
+    n_tokens = (
+        F.length(content) - F.length(F.replace(content, F.lit(" "), F.lit(""))) + 1
+    ).cast("long")
+    # kw_hits lands in its own projection and quality references the
+    # COLUMN: the classifier (13 contains over lowered content) is
+    # evaluated once per row, not once per consumer (CollapseProject
+    # keeps the projections apart when an alias is multiply referenced)
+    sections["kw_hits"] = live(keyword_hits(content).cast("int"))
+    quality = F.round(
+        F.least(
+            F.lit(1.0),
+            F.when((F.length(content) >= 200) & (F.length(content) <= 50000), 0.5)
+            .otherwise(0.2)
+            + F.least(F.col("kw_hits").cast("double") / 10.0, F.lit(0.5)),
+        ),
+        4,
     )
-    if enrich:
-        # ingest-grade variants: constant passes over the content, no
-        # array-materializing regexes (operators/textstats.py keeps the
-        # full-fidelity versions for the analysis catalog — at 10^6+ rows
-        # per epoch, regexp_extract_all's per-row token arrays are pure GC
-        # pressure the hot path can't afford)
-        live = lambda c: F.when(is_del, F.lit(None)).otherwise(c)  # noqa: E731
-        content = F.col("content")
-        # replace-then-length beats split-size HERE despite losing an
-        # isolated microbench: split materializes a per-row array of token
-        # substrings, and inside the already allocation-heavy extraction
-        # projection that extra garbage cost more than replace's single
-        # copy (measured: MOR replay 11.6s -> 17.5s with split-size)
-        n_tokens = (
-            F.length(content) - F.length(F.replace(content, F.lit(" "), F.lit(""))) + 1
-        ).cast("long")
-        # kw_hits lands in its own projection and quality references the
-        # COLUMN: the classifier (13 contains over lowered content) is
-        # evaluated once per row, not once per consumer (CollapseProject
-        # keeps the projections apart when an alias is multiply referenced)
-        df = df.withColumn("kw_hits", live(keyword_hits(content).cast("int")))
-        quality = F.round(
-            F.least(
-                F.lit(1.0),
-                F.when((F.length(content) >= 200) & (F.length(content) <= 50000), 0.5)
-                .otherwise(0.2)
-                + F.least(F.col("kw_hits").cast("double") / 10.0, F.lit(0.5)),
-            ),
-            4,
-        )
-        df = (
-            df.withColumn("quality", live(quality))
-            .withColumn("n_tokens", live(n_tokens))
-            # exact-dup fingerprint derived from the sha256 already computed
-            # over the content — grouping needs any collision-resistant
-            # digest; a second full hash pass over multi-KB content buys
-            # nothing (measured: one md5 pass ≈ one sha pass over the epoch)
-            .withColumn("fingerprint", live(F.substring(F.col("content_sha"), 1, 32)))
-        )
-    return df
+    scores = {
+        "quality": live(quality),
+        "n_tokens": live(n_tokens),
+        # exact-dup fingerprint derived from the sha256 already computed
+        # over the content — grouping needs any collision-resistant
+        # digest; a second full hash pass over multi-KB content buys
+        # nothing (measured: one md5 pass ≈ one sha pass over the epoch)
+        "fingerprint": live(F.substring(F.col("content_sha"), 1, 32)),
+    }
+    return title, sections, scores
 
 
 def default_validator(df: DataFrame):
@@ -194,18 +210,18 @@ def validate_slice(
 def prebucket_for_merge(
     df: DataFrame, n_buckets: int, parallelism: int, order_col: str = "seq"
 ) -> DataFrame:
-    """Place the epoch's ONE full-row shuffle BEFORE the extraction UDF:
+    """Place the epoch's ONE full-row shuffle BEFORE extraction:
     repartition by (bucket, salt) into max(n_buckets, ~3×cores) partitions.
 
     Why: scan parallelism is capped by the source's row-group count
     (wal.epoch_stats n_read_units) — a WAL epoch laid out as a few big
-    files would bind the expensive UDF stage to that layout (e.g. 41 read
-    units on 32 cores = 1.3 task waves with stragglers). After this
-    shuffle the UDF runs at full cluster parallelism, hot buckets are
+    files would bind the expensive extraction stage to that layout (e.g.
+    41 read units on 32 cores = 1.3 task waves with stragglers). After
+    this shuffle extraction runs at full cluster parallelism, hot buckets are
     split across salts, and the MOR delta write needs no further shuffle
     (each task holds whole (bucket, salt) groups → ≤ n_salts files per
     bucket). Same total shuffle count as before — the shuffle just moved
-    to where it also buys UDF parallelism.
+    to where it also buys extraction parallelism.
     """
     import math
 
@@ -316,8 +332,8 @@ def run_ingest(
             validator = constraints_validator(declared)
 
     # CPU-heavy per-row extraction wants more, smaller scan splits than the
-    # I/O-oriented 128MB default — the scan IS the UDF's parallelism now
-    # (no pre-UDF repartition shuffle). Restored on exit.
+    # I/O-oriented 128MB default — the scan IS the extraction's parallelism
+    # (no pre-extraction repartition shuffle). Restored on exit.
     prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
 
@@ -359,12 +375,13 @@ def _run_epochs(
     audit_prev_rows: int | None = None
 
     for epoch in range(table.last_epoch + 1, hi_epoch + 1):
-        slice_df = wal_src.read_epoch(spark, wal_path, epoch)
-
         # slice metadata from parquet footers (pyarrow, no Spark job): seq
         # range + event count → lag metric + compaction-strategy choice;
-        # row-group count → extraction-parallelism guard.
-        lo, hi, cnt, units = wal_src.epoch_stats(wal_path, epoch)
+        # row-group count → extraction-parallelism guard; footer schema →
+        # the slice's Spark schema without re-inferring it every epoch.
+        footers = wal_src.epoch_footers(wal_path, epoch)
+        lo, hi, cnt, units = footers[:4]
+        slice_df = wal_src.read_epoch(spark, wal_path, epoch, footers)
         _, tail_hi, _, _ = wal_src.epoch_stats(wal_path, hi_epoch)
         lag = max(0, int(tail_hi) - int(hi)) if (tail_hi is not None and hi is not None) else 0
         # size-based degradation guard: above the threshold the epoch's key
@@ -379,7 +396,7 @@ def _run_epochs(
             strategy = "broadcast_semi"
         # parallelism guard: a large epoch whose file layout can't feed the
         # cluster (few row groups) gets its bucket shuffle moved BEFORE the
-        # UDF so extraction runs at full width (prebucket_for_merge)
+        # extraction so it runs at full width (prebucket_for_merge)
         par = spark.sparkContext.defaultParallelism
         do_prebucket = cnt >= prebucket_min_events and units < 2 * par
 
@@ -428,26 +445,13 @@ def _run_epochs(
                 slice_df, bad = validate_slice(slice_df, validator, observation=q_obs)
 
                 def quarantine_pre_commit(bad=bad, q_obs=q_obs, qpath=qpath, status_col=status_col):
-                    # Observation.get blocks until SOME action has consumed
-                    # the observed lineage. The merge path always runs one
-                    # (CoW's affected-bucket collect / the MOR delta write),
-                    # but a caller reaching the commit with no prior action
-                    # (e.g. an externally-supplied empty bucket list) would
-                    # hang forever here — so when the metric is not yet
-                    # populated, count the bad rows directly instead (one
-                    # extra job on that cold path only; ADVICE r4).
-                    try:
-                        if q_obs._jo is None or q_obs._jo.getRowOrEmpty().isEmpty():
-                            n_bad = bad.count()
-                        else:
-                            n_bad = int(q_obs.get["bad_rows"] or 0)
-                    except Exception:
-                        # Spark 4.1's toPyRow asserts on the metrics row an
-                        # empty-relation short-circuit plan produces (an
-                        # ALL-bad epoch: good branch empty → the consuming
-                        # action collected nothing) — fall back to the
-                        # direct count, same cost class as the cold path
-                        n_bad = bad.count()
+                    # the merge path always runs an action over the
+                    # observed lineage (CoW's affected-bucket collect / the
+                    # MOR delta write), but a caller reaching the commit
+                    # with none (e.g. an externally-supplied empty bucket
+                    # list) gets the direct count instead — one extra job
+                    # on that cold path only (ADVICE r4)
+                    n_bad = int(observed_or(q_obs, "bad_rows", bad.count) or 0)
                     if n_bad > 0:
                         bad.withColumn("status", status_col).write.mode(
                             "overwrite"
@@ -457,9 +461,9 @@ def _run_epochs(
         ensure_evolved(table, slice_df.schema)
 
         # broadcast_semi compaction: only (key, seq) pairs shuffle; the
-        # content payload flows scan → semi-join filter → extraction UDF →
+        # content payload flows scan → semi-join filter → extraction →
         # bucket write with exactly ONE full-row shuffle (the bucket
-        # layout — placed before the UDF when the scan can't feed the
+        # layout — placed before extraction when the scan can't feed the
         # cluster, after it otherwise).
         compacted = compact_latest(slice_df, strategy=strategy)
         if do_prebucket:
@@ -468,7 +472,7 @@ def _run_epochs(
 
         # affected-bucket hint for COW (pruned key-columns-only scan): the
         # MERGE is then a single Spark action per epoch — the
-        # extraction-UDF lineage runs once.
+        # extraction lineage runs once.
         affected = None
         if mode == "cow":
             affected = [
