@@ -26,7 +26,7 @@ from read_comp_data_pipeline_spark.plans.queries import (  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the CDC engine end-to-end — WAL derived from sf0.001
-    events, replayed epoch-by-epoch (compaction → extraction UDF → MERGE
+    events, replayed epoch-by-epoch (compaction → extraction → MERGE
     into a snapshot table), returning the sha256-stamped final state."""
     return cdc_replay_final_state(spark, "/root/testdata/sf0.001")
 

@@ -63,12 +63,14 @@ Commands:
               pair with `tag`, which pins the state against vacuum)
   dedup-store  — build the near-dup signature store for a document corpus
   dedup-delta  — near-dup edges of (corpus ∪ delta), banding only the
-                 delta against the store; optionally fold the delta back
-                 in (--update-out) so the next epoch chains
+                 delta against the store at the store's own parameters;
+                 optionally fold the delta back in (--update-out) so the
+                 next epoch chains
   emb-store    — build the embedding near-dup store (exact-vector
                  seen-set + reps' LSH buckets, partition-pruned per delta)
   emb-delta    — embedding near-dup edges of (corpus ∪ delta), bucketing
-                 only the delta against the store; --update-out chains
+                 only the delta against the store at the store's own
+                 parameters; --update-out chains
   para-store   — build the corpus's distinct-paragraph seen-set (sha2
                  digests, hash-bucket-partitioned)
   para-delta   — paragraph-dedup a new epoch against the store (epoch
@@ -259,11 +261,12 @@ def main(argv: list[str] | None = None) -> int:
         p.add_argument("--store", required=True)
         p.add_argument("--id-col", default="doc_id")
         p.add_argument("--text-col", default="text")
-        p.add_argument("--ngram", type=int, default=5)
-        p.add_argument("--minhashes", type=int, default=16)
-        p.add_argument("--bands", type=int, default=4)
-        p.add_argument("--threshold", type=float, default=0.7)
-        if name == "dedup-delta":
+        if name == "dedup-store":
+            p.add_argument("--ngram", type=int, default=5)
+            p.add_argument("--minhashes", type=int, default=16)
+            p.add_argument("--bands", type=int, default=4)
+            p.add_argument("--threshold", type=float, default=0.7)
+        else:
             p.add_argument("--edges-out", default=None,
                            help="write the (id_a, id_b, jaccard) edge set here")
             p.add_argument("--update-out", default=None,
@@ -275,10 +278,11 @@ def main(argv: list[str] | None = None) -> int:
         p.add_argument("--store", required=True)
         p.add_argument("--id-col", default="vec_id")
         p.add_argument("--vec-col", default="embedding")
-        p.add_argument("--planes", type=int, default=6)
-        p.add_argument("--dim", type=int, default=64)
-        p.add_argument("--threshold", type=float, default=0.30)
-        if name == "emb-delta":
+        if name == "emb-store":
+            p.add_argument("--planes", type=int, default=6)
+            p.add_argument("--dim", type=int, default=64)
+            p.add_argument("--threshold", type=float, default=0.30)
+        else:
             p.add_argument("--edges-out", default=None,
                            help="write the (id_a, id_b, cosine) edge set here")
             p.add_argument("--update-out", default=None,
@@ -534,8 +538,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         delta = spark.read.parquet(args.docs)
-        kw = dict(text_col=args.text_col, id_col=args.id_col, n=args.ngram,
-                  k=args.minhashes, bands=args.bands, threshold=args.threshold)
+        kw = dict(text_col=args.text_col, id_col=args.id_col)
         edges = incremental_near_dups(delta, args.store, **kw)
         if args.edges_out:
             edges.write.mode("overwrite").parquet(args.edges_out)
@@ -565,8 +568,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         delta = spark.read.parquet(args.vecs)
-        kw = dict(id_col=args.id_col, vec_col=args.vec_col,
-                  n_planes=args.planes, dim=args.dim, threshold=args.threshold)
+        kw = dict(id_col=args.id_col, vec_col=args.vec_col)
         edges = incremental_embedding_near_dups(delta, args.store, **kw)
         if args.edges_out:
             edges.write.mode("overwrite").parquet(args.edges_out)

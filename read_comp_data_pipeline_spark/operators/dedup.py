@@ -19,12 +19,18 @@ replicate it bit-for-bit via the portable hash (functions/hashing.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from read_comp_data_pipeline_spark.functions.hashing import phash, phash_sql
+from read_comp_data_pipeline_spark.operators.store import (
+    StoreKind,
+    check_out_path,
+    exact_groups,
+    fold_delta,
+    relabel_edges,
+    relabel_ids,
+)
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -584,9 +590,10 @@ def connected_components_sql(
 
 # partition-count default for the store's bucketed relations (bands by
 # band-hash bucket `bk`, shingles by id bucket `sk`): the knob a real
-# deployment sizes to its file-count budget; persisted in _store_meta.json
+# deployment sizes to its file-count budget; recorded in the store's meta
 # so readers always agree with the writer
 _STORE_BUCKETS = 16
+_SIG = StoreKind("signature", _STORE_BUCKETS, (("bands", "bk"), ("shingles", "sk")))
 
 
 def _bk_expr():
@@ -598,26 +605,6 @@ def _sk_expr():
         phash(F.concat(F.lit("sk:"), F.col("id").cast("string"))),
         F.lit(_STORE_BUCKETS),
     ).cast("int")
-
-
-def _par_jobs(*thunks) -> None:
-    """Run independent Spark actions concurrently from driver threads
-    (guide §2.6): each job's straggler tail back-fills the others'
-    executors instead of serializing the latencies. Exceptions propagate
-    (the first failure re-raises)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(3, len(thunks))) as pool:
-        for fut in [pool.submit(t) for t in thunks]:
-            fut.result()
-
-
-def _write_store_meta(path: str, n: int, k: int, bands: int) -> None:
-    import json
-
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "_store_meta.json"), "w") as f:
-        json.dump({"n": n, "k": k, "bands": bands, "buckets": _STORE_BUCKETS}, f)
 
 
 def build_signature_store(
@@ -650,34 +637,25 @@ def build_signature_store(
     * ``edges``       (id_a, id_b, jaccard)            — verified near-dup
       edges among reps (the already-known result)
 
+    ``n``, ``k``, ``bands`` and ``threshold`` are recorded in the store's
+    meta (:mod:`.store`); the delta-side calls read them from there.
+
     Reference analogue: the crawl's persisted seen-set makes per-page work
     independent of corpus size (``/root/reference/search_scrape.py:330``,
     ``:1048``); this is the content-level generalization.
     """
-    _write_store_meta(path, n, k, bands)
+    _SIG.write_meta(path, n=n, k=k, bands=bands, threshold=threshold)
     # ONE md5 hash-aggregate over the corpus, checkpointed and reused by
-    # groups / exact_edges / reps. The aggregate carries LONGS ONLY (same
-    # discipline as collapse_exact since r6): min(text) in the buffer
-    # forced a SortAggregate that sorted the full corpus payload twice,
-    # and the old checkpoint stored every keeper text; the keeper's text
-    # is instead fetched by a SHUFFLE_HASH semi-join — value-identical
-    # (texts in a group are md5-equal).
+    # groups / exact_edges / reps (store.exact_groups, longs only); the
+    # keeper's text is fetched by a SHUFFLE_HASH semi-join — value-identical
+    # (texts in a group are md5-equal). The hint stays here: the embedding
+    # store's keeper fetch is faster without it.
     hashed = df.select(
         F.col(id_col).alias("id"),
         F.col(text_col).alias("text"),
         F.md5(F.col(text_col)).alias("content_hash"),
     )
-    grp = (
-        hashed.groupBy("content_hash")
-        .agg(F.min("id").alias("keeper_id"))
-        .localCheckpoint(eager=True)
-    )
-    exact_edges = (
-        hashed.drop("text")
-        .join(grp, on="content_hash")
-        .where(F.col("id") != F.col("keeper_id"))
-        .select("content_hash", F.col("keeper_id").alias("id_a"), F.col("id").alias("id_b"))
-    )
+    grp, exact_edges = exact_groups(hashed, "content_hash")
     reps = hashed.join(
         grp.select("content_hash", F.col("keeper_id").alias("id")).hint("SHUFFLE_HASH"),
         on=["content_hash", "id"],
@@ -685,23 +663,15 @@ def build_signature_store(
     ).select(F.col("id").alias(id_col), F.col("text").alias(text_col))
     sh = shingles(reps, text_col, id_col, n)
     # groups / exact_edges / shingles depend only on the checkpointed grp —
-    # independent jobs, submitted concurrently so each write's tail
-    # back-fills the others' idle executors (guide §2.6); Spark schedules
-    # concurrent jobs FIFO within one session
-    _par_jobs(
-        lambda: grp.write.mode("overwrite").parquet(f"{path}/groups"),
-        lambda: exact_edges.write.mode("overwrite").parquet(f"{path}/exact_edges"),
-        lambda: sh.withColumn("sk", _sk_expr())
-        .write.mode("overwrite")
-        .partitionBy("sk")
-        .parquet(f"{path}/shingles"),
+    # independent jobs, written concurrently; Spark schedules concurrent
+    # jobs FIFO within one session
+    _SIG.write(
+        path, groups=grp, exact_edges=exact_edges, shingles=sh.withColumn("sk", _sk_expr())
     )
     spark = df.sparkSession
     sh_r = spark.read.parquet(f"{path}/shingles")  # reuse, don't re-shingle
     sig = minhash_signatures(sh_r.select("id", "shingle"), k)
-    band_stack(sig, k, bands).withColumn("bk", _bk_expr()).write.mode(
-        "overwrite"
-    ).partitionBy("bk").parquet(f"{path}/bands")
+    _SIG.write(path, bands=band_stack(sig, k, bands).withColumn("bk", _bk_expr()))
     bands_r = spark.read.parquet(f"{path}/bands")
     pairs = (
         bands_r.alias("a")
@@ -713,7 +683,7 @@ def build_signature_store(
     near = jaccard_on_pairs(pairs, sh_r.select("id", "shingle")).where(
         F.col("jaccard") >= threshold
     )
-    near.write.mode("overwrite").parquet(f"{path}/edges")
+    _SIG.write(path, edges=near)
 
 
 def incremental_near_dups(
@@ -721,17 +691,13 @@ def incremental_near_dups(
     store_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 5,
-    k: int = 16,
-    bands: int = 4,
-    threshold: float = 0.7,
 ) -> DataFrame:
     """Near-dup edge set of (corpus ∪ delta), computed by banding ONLY the
     delta against a persisted :func:`build_signature_store` — value-exact
-    equal to running :func:`minhash_near_dups` on the full union, while
-    shingling/signing/verifying work is proportional to the delta (the
-    per-epoch ingest shape: at 100 TB the corpus is never re-read — its
-    TEXT is not even in the store).
+    equal to running :func:`minhash_near_dups` on the full union at the
+    store's build parameters, while shingling/signing/verifying work is
+    proportional to the delta (the per-epoch ingest shape: at 100 TB the
+    corpus is never re-read — its TEXT is not even in the store).
 
     How batch equality is preserved:
 
@@ -740,6 +706,7 @@ def incremental_near_dups(
       a delta id smaller than the stored keeper TAKES OVER the group and
       every stored relation mentioning the old keeper is relabeled
       (same text ⇒ identical bands/shingles ⇒ only the label changes);
+      this exact-group fold is :func:`.store.fold_delta`;
     * genuinely new content is collapsed within the delta, banded, and
       its band keys joined against the stored band relation (corpus side)
       and itself (delta side); candidates get the same exact-Jaccard
@@ -749,11 +716,10 @@ def incremental_near_dups(
 
     All delta-derived lookup sides (touched groups, relabel map) are
     broadcast — they are epoch-bounded, so the store relations are never
-    shuffled. In production the store would additionally be bucketed by
-    band_hash so the candidate join prunes store files; the plan contract
-    tested here is the scan-level one: no scan of corpus text.
+    shuffled. The store's band and shingle files are pruned to the
+    buckets the delta touches; the plan never scans corpus text.
     """
-    return _incremental_state(delta, store_path, text_col, id_col, n, k, bands, threshold)["out"]
+    return _incremental_state(delta, store_path, text_col, id_col)["out"]
 
 
 def update_signature_store(
@@ -762,72 +728,42 @@ def update_signature_store(
     out_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 5,
-    k: int = 16,
-    bands: int = 4,
-    threshold: float = 0.7,
 ) -> None:
     """Fold a processed delta INTO the signature store, producing the store
     of (corpus ∪ delta) at ``out_path`` — the commit step that makes
     :func:`incremental_near_dups` chainable epoch over epoch: process
-    epoch's delta against store N, write store N+1, repeat. Identical to
-    rebuilding the store from the union (tested), but only delta-derived
-    rows are computed fresh; corpus rows pass through (relabeled on keeper
-    takeover). Parquet rewrites whole relations here; on Iceberg each
-    relation is a MERGE/append and untouched files are untouched.
+    epoch's delta against store N, write store N+1 (same build
+    parameters), repeat. Identical to rebuilding the store from the union
+    (tested), but only delta-derived rows are computed fresh; corpus rows
+    pass through (relabeled on keeper takeover). Parquet rewrites whole
+    relations here; on Iceberg each relation is a MERGE/append and
+    untouched files are untouched.
     """
-    if os.path.abspath(out_path) == os.path.abspath(store_path):
-        raise ValueError("out_path must differ from store_path (snapshot-style update)")
-    st = _incremental_state(delta, store_path, text_col, id_col, n, k, bands, threshold)
-    _write_store_meta(out_path, n, k, bands)
+    check_out_path(store_path, out_path)
+    st = _incremental_state(delta, store_path, text_col, id_col)
+    _SIG.write_meta(out_path, **_SIG.params(store_path))
     # the five relations are independent actions over the delta pass's
-    # checkpointed intermediates — concurrent submission overlaps their
-    # tails (guide §2.6). sk is a hash of the id, so takeover relabeling
-    # moves rows across buckets — recomputed from the final ids.
-    _par_jobs(
-        lambda: st["groups"].write.mode("overwrite").parquet(f"{out_path}/groups"),
-        lambda: st["exact_edges"].write.mode("overwrite").parquet(
-            f"{out_path}/exact_edges"
-        ),
-        lambda: st["bands"].write.mode("overwrite").partitionBy("bk").parquet(
-            f"{out_path}/bands"
-        ),
-        lambda: st["shingles"]
-        .withColumn("sk", _sk_expr())
-        .write.mode("overwrite")
-        .partitionBy("sk")
-        .parquet(f"{out_path}/shingles"),
-        lambda: st["edges"].write.mode("overwrite").parquet(f"{out_path}/edges"),
+    # checkpointed intermediates. sk is a hash of the id, so takeover
+    # relabeling moves rows across buckets — recomputed from the final ids.
+    _SIG.write(
+        out_path,
+        groups=st["groups"],
+        exact_edges=st["exact_edges"],
+        bands=st["bands"],
+        shingles=st["shingles"].withColumn("sk", _sk_expr()),
+        edges=st["edges"],
     )
 
 
 def _incremental_state(
-    delta: DataFrame,
-    store_path: str,
-    text_col: str,
-    id_col: str,
-    n: int,
-    k: int,
-    bands: int,
-    threshold: float,
+    delta: DataFrame, store_path: str, text_col: str, id_col: str
 ) -> dict[str, DataFrame]:
     """Shared machinery for :func:`incremental_near_dups` (needs ``out``)
-    and :func:`update_signature_store` (needs the five updated relations)."""
-    # a store is only joinable with the EXACT parameters it was built
-    # under (different n/k/bands → different shingles/band keys → silent
-    # recall loss); the meta file makes a mismatch fail loudly
-    meta_path = os.path.join(store_path, "_store_meta.json")
-    if os.path.exists(meta_path):
-        import json
-
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if (meta.get("n"), meta.get("k"), meta.get("bands")) != (n, k, bands):
-            raise ValueError(
-                f"signature store at {store_path} was built with "
-                f"n/k/bands={meta.get('n')}/{meta.get('k')}/{meta.get('bands')}, "
-                f"got {n}/{k}/{bands}"
-            )
+    and :func:`update_signature_store` (needs the five updated relations).
+    The shingle/band/threshold parameters come from the store's meta: a
+    store is only joinable under the parameters it was built with."""
+    p = _SIG.params(store_path)
+    n, k, bands, threshold = p["n"], p["k"], p["bands"], p["threshold"]
 
     spark = delta.sparkSession
     groups_s = spark.read.parquet(f"{store_path}/groups")
@@ -841,60 +777,13 @@ def _incremental_state(
         F.col(text_col).alias("text"),
         F.md5(F.col(text_col)).alias("content_hash"),
     )
-    # corpus-side seen-set lookup: groups is the CORPUS-sized relation, so
-    # it is never broadcast — a thin (hash, keeper) equi-join; in production
-    # both sides bucket on content_hash so even the shuffle disappears
-    # ONE checkpoint for the seen-set join; known/new are filters over it
-    # (two separate checkpoints re-ran the corpus-side join twice and paid
-    # two actions for one epoch-sized relation)
-    dj = d.join(groups_s, on="content_hash", how="left").localCheckpoint(eager=True)
-    known = dj.where(F.col("keeper_id").isNotNull())
-    new = dj.where(F.col("keeper_id").isNull()).drop("keeper_id")
+    fold = fold_delta(d, groups_s, exact_s, "content_hash")
+    relabel = fold["relabel"]
 
-    # ── known hashes: group updates + possible keeper takeover ──────────
-    kagg = known.groupBy("content_hash").agg(F.min("id").alias("_delta_min"))
-    touched = (
-        groups_s.join(F.broadcast(kagg), on="content_hash")
-        .withColumn("new_keeper", F.least("keeper_id", "_delta_min"))
-        .localCheckpoint(eager=True)  # reused 3×: relabel, rebuild, anti keys
-    )
-    relabel = touched.where(F.col("new_keeper") != F.col("keeper_id")).select(
-        F.col("keeper_id").alias("_old"), F.col("new_keeper").alias("_new")
-    )
-
-    # exact star edges: untouched groups pass through; touched rebuilt
-    untouched_exact = exact_s.join(
-        F.broadcast(touched.select("content_hash")), on="content_hash", how="left_anti"
-    )
-    members = (
-        touched.select("content_hash", F.col("keeper_id").alias("m"))
-        .unionByName(
-            exact_s.join(
-                F.broadcast(touched.select("content_hash")), on="content_hash"
-            ).select("content_hash", F.col("id_b").alias("m"))
-        )
-        .unionByName(known.select("content_hash", F.col("id").alias("m")))
-    )
-    touched_exact = (
-        members.join(F.broadcast(touched.select("content_hash", "new_keeper")), on="content_hash")
-        .where(F.col("m") != F.col("new_keeper"))
-        .select("content_hash", F.col("new_keeper").alias("id_a"), F.col("m").alias("id_b"))
-    )
-
-    # ── new hashes: collapse within the delta, band, verify ─────────────
-    # longs-only collapse + keeper fetch (the r6 collapse_exact shape: no
-    # payload-sorting SortAggregate); the delta-sized keeper set is
-    # broadcast for the fetch like every other delta-derived lookup here
-    new_grp = new.groupBy("content_hash").agg(F.min("id").alias("id"))
-    new_exact = (
-        new.join(F.broadcast(new_grp.withColumnRenamed("id", "_k")), on="content_hash")
-        .where(F.col("id") != F.col("_k"))
-        .select("content_hash", F.col("_k").alias("id_a"), F.col("id").alias("id_b"))
-    )
-    new_groups = new.join(
-        F.broadcast(new_grp), on=["content_hash", "id"], how="left_semi"
-    ).select("content_hash", "id", "text")
-    delta_sh = shingles(new_groups, "text", "id", n).localCheckpoint(eager=True)
+    # ── new hashes: band the delta's new reps, verify ──────────────────
+    delta_sh = shingles(
+        fold["new_rows"].select("content_hash", "id", "text"), "text", "id", n
+    ).localCheckpoint(eager=True)
     delta_bands = band_stack(minhash_signatures(delta_sh, k), k, bands).withColumn(
         "bk", _bk_expr()
     ).localCheckpoint(eager=True)
@@ -940,49 +829,16 @@ def _incremental_state(
         F.col("jaccard") >= threshold
     )
 
-    # ── relabel takeover keepers in every rep-level edge ────────────────
-    def _relabel(e: DataFrame) -> DataFrame:
-        e = e.join(
-            F.broadcast(relabel.withColumnRenamed("_old", "id_a").withColumnRenamed("_new", "_na")),
-            on="id_a", how="left",
-        ).join(
-            F.broadcast(relabel.withColumnRenamed("_old", "id_b").withColumnRenamed("_new", "_nb")),
-            on="id_b", how="left",
-        )
-        a2 = F.coalesce(F.col("_na"), F.col("id_a"))
-        b2 = F.coalesce(F.col("_nb"), F.col("id_b"))
-        return e.select(
-            F.least(a2, b2).alias("id_a"), F.greatest(a2, b2).alias("id_b"), "jaccard"
-        )
-
-    near_all = _relabel(edges_s.unionByName(near_new))
-    exact_all = untouched_exact.unionByName(touched_exact).unionByName(new_exact)
+    near_all = relabel_edges(edges_s.unionByName(near_new), relabel, "jaccard")
     out = near_all.unionByName(
-        exact_all.select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
+        fold["exact_edges"].select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
     )
-
-    # ── the five updated store relations (corpus ∪ delta) ───────────────
-    def _relabel_ids(rel: DataFrame) -> DataFrame:
-        return rel.join(
-            F.broadcast(relabel.withColumnRenamed("_old", "id")), on="id", how="left"
-        ).select(
-            F.coalesce(F.col("_new"), F.col("id")).alias("id"),
-            *[c for c in rel.columns if c != "id"],
-        )
-
-    groups_u = groups_s.join(
-        F.broadcast(touched.select("content_hash", "new_keeper")),
-        on="content_hash", how="left",
-    ).select(
-        "content_hash",
-        F.coalesce(F.col("new_keeper"), F.col("keeper_id")).alias("keeper_id"),
-    ).unionByName(new_groups.select("content_hash", F.col("id").alias("keeper_id")))
     return {
         "out": out,
-        "groups": groups_u,
-        "exact_edges": exact_all,
-        "bands": _relabel_ids(bands_s).unionByName(delta_bands),
-        "shingles": _relabel_ids(sh_s.select("id", "shingle")).unionByName(delta_sh),
+        "groups": fold["groups"],
+        "exact_edges": fold["exact_edges"],
+        "bands": relabel_ids(bands_s, relabel).unionByName(delta_bands),
+        "shingles": relabel_ids(sh_s.select("id", "shingle"), relabel).unionByName(delta_sh),
         "edges": near_all,
         # introspection handles (tests assert the pruning on real files)
         "_bands_scan": bands_pruned,

@@ -733,8 +733,8 @@ class HashMergeTable:
         ``affected_buckets``/``src_rows`` are optional hints (computed
         cheaply from the raw slice by the ingest loop — a pruned scan of the
         key columns only) that let the MERGE run as a single Spark action:
-        without them the source lineage (which may contain the expensive
-        extraction UDF) would be executed once per metadata query.
+        without them the source lineage (which carries the extraction
+        expressions) would be executed once per metadata query.
 
         ``src_keys_broadcastable``: set False when the epoch's key set is
         too large for a driver-built broadcast (the ingest loop passes
@@ -1190,7 +1190,7 @@ class HashMergeTable:
         out_path = os.path.join(self.path, data_dir)
         if pre_bucketed:
             # the ingest loop already placed the one full-row shuffle
-            # (bucket+salt, BEFORE the extraction UDF — see
+            # (bucket+salt, BEFORE the extraction expressions — see
             # ingest.prebucket_for_merge); each task holds whole
             # (bucket, salt) groups, so the partitionBy write emits a
             # bounded ≤ n_salts files per bucket with no further shuffle

@@ -37,18 +37,17 @@ applied at paragraph granularity.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from read_comp_data_pipeline_spark.functions.hashing import phash
+from read_comp_data_pipeline_spark.operators.store import StoreKind, check_out_path
 
 # paragraph-store hash-bucket fanout: at 100 TB the store would use a
 # much larger fanout (2^12-2^14) so a small epoch's touched-bucket set
 # prunes most store files; 64 keeps test artifacts readable
 _PSTORE_BUCKETS = 64
+_PARA = StoreKind("paragraph", _PSTORE_BUCKETS, (("hashes", "pb"),))
 
 
 def explode_paragraphs(
@@ -154,30 +153,21 @@ def build_paragraph_store(
     (``/root/reference/search_scrape.py:330``), here at paragraph
     granularity — the same discipline
     :func:`read_comp_data_pipeline_spark.operators.dedup.build_signature_store`
-    applies at document granularity.
+    applies at document granularity (the shared store contract is
+    :mod:`.store`).
     """
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "_store_meta.json"), "w") as f:
-        json.dump({"buckets": _PSTORE_BUCKETS}, f)
-    (
-        explode_paragraphs(df, text_col, id_col)
+    _PARA.write_meta(path)
+    _PARA.write(
+        path,
+        hashes=explode_paragraphs(df, text_col, id_col)
         .select(F.sha2(F.col("para"), 256).alias("h"))
         .distinct()
-        .withColumn("pb", _pb_expr())
-        .write.mode("overwrite")
-        .partitionBy("pb")
-        .parquet(f"{path}/hashes")
+        .withColumn("pb", _pb_expr()),
     )
 
 
 def _load_pstore(spark, path: str):
-    with open(os.path.join(path, "_store_meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("buckets") != _PSTORE_BUCKETS:
-        raise ValueError(
-            f"paragraph store at {path} was built with buckets="
-            f"{meta.get('buckets')}, engine expects {_PSTORE_BUCKETS}"
-        )
+    _PARA.params(path)
     return spark.read.parquet(f"{path}/hashes")
 
 
@@ -205,7 +195,7 @@ def paragraph_dedup_incremental(
     production fanout the anti join is additionally storage-partitioned
     on both sides, so the store is never re-shuffled.
     """
-    spark = delta.sparkSession
+    store = _load_pstore(delta.sparkSession, store_path)  # refuse before any job
     paras = explode_paragraphs(delta, text_col, id_col)
     winners = (
         paras.groupBy(F.sha2(F.col("para"), 256).alias("h"))
@@ -220,8 +210,9 @@ def paragraph_dedup_incremental(
         .localCheckpoint(eager=False)
     )
     touched = [r["pb"] for r in winners.select("pb").distinct().collect()]
-    store = _load_pstore(spark, store_path).where(F.col("pb").isin(touched))
-    kept = winners.join(store, on=["pb", "h"], how="left_anti").drop("pb", "h")
+    kept = winners.join(
+        store.where(F.col("pb").isin(touched)), on=["pb", "h"], how="left_anti"
+    ).drop("pb", "h")
     return _reassemble(delta, paras, kept, id_col)
 
 
@@ -238,8 +229,7 @@ def update_paragraph_store(
     Snapshot-style like the signature store: identical to rebuilding from
     the union (tested), but only the delta's digests are computed fresh.
     """
-    if os.path.abspath(out_path) == os.path.abspath(store_path):
-        raise ValueError("out_path must differ from store_path (snapshot-style update)")
+    check_out_path(store_path, out_path)
     spark = delta.sparkSession
     new_h = (
         explode_paragraphs(delta, text_col, id_col)
@@ -248,10 +238,8 @@ def update_paragraph_store(
         .withColumn("pb", _pb_expr())
     )
     merged = _load_pstore(spark, store_path).unionByName(new_h).distinct()
-    os.makedirs(out_path, exist_ok=True)
-    with open(os.path.join(out_path, "_store_meta.json"), "w") as f:
-        json.dump({"buckets": _PSTORE_BUCKETS}, f)
-    merged.write.mode("overwrite").partitionBy("pb").parquet(f"{out_path}/hashes")
+    _PARA.write_meta(out_path)
+    _PARA.write(out_path, hashes=merged)
 
 
 def paragraph_dedup_incremental_oracle_sql(corpus_rel: str, delta_rel: str) -> str:

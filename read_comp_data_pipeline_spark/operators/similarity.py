@@ -20,6 +20,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from read_comp_data_pipeline_spark.operators.store import (
+    StoreKind,
+    check_out_path,
+    exact_groups,
+    fold_delta,
+    relabel_edges,
+    relabel_ids,
+)
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """JVM-side dot product: fold over zip_with in doubles (element order —
@@ -469,6 +478,7 @@ def embedding_near_dup_pairs(
 # ═══════════════════════════════════════════════════════════════════════════
 
 _EMB_STORE_BUCKETS = 16
+_EMB = StoreKind("embedding", _EMB_STORE_BUCKETS, (("reps", "ek"),))
 
 
 def _vec_hash(vec: Column) -> Column:
@@ -496,19 +506,6 @@ def _ek_expr():
     return F.pmod(F.xxhash64(F.col("bucket")), F.lit(_EMB_STORE_BUCKETS)).cast("int")
 
 
-def _write_emb_store_meta(path: str, n_planes: int, dim: int, threshold: float) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "_store_meta.json"), "w") as f:
-        json.dump(
-            {"n_planes": n_planes, "dim": dim, "threshold": threshold,
-             "buckets": _EMB_STORE_BUCKETS},
-            f,
-        )
-
-
 def build_embedding_store(
     emb: DataFrame,
     path: str,
@@ -530,6 +527,9 @@ def build_embedding_store(
       minhash there is ONE bucket per vector, and the rep's vector doubles
       as the verification payload — no separate shingle relation
     * ``edges``       (id_a, id_b, cosine)      — known rep-rep near-dups
+
+    ``n_planes``, ``dim`` and ``threshold`` are recorded in the store's
+    meta (:mod:`.store`); the delta-side calls read them from there.
     """
     d = emb.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
@@ -537,16 +537,7 @@ def build_embedding_store(
     )
     # thin (hash, keeper) relation feeds three consumers — checkpointed
     # once instead of re-running the scan + vector-hash + aggregate each
-    grp = (
-        d.groupBy("vec_hash")
-        .agg(F.min("id").alias("keeper_id"))
-        .localCheckpoint(eager=True)
-    )
-    exact = (
-        d.join(grp, on="vec_hash")
-        .where(F.col("id") != F.col("keeper_id"))
-        .select("vec_hash", F.col("keeper_id").alias("id_a"), F.col("id").alias("id_b"))
-    )
+    grp, exact = exact_groups(d, "vec_hash")
     reps = (
         d.join(
             grp.select("vec_hash", F.col("keeper_id").alias("id")),
@@ -555,26 +546,15 @@ def build_embedding_store(
         .select("id", "vec")
         .withColumn("bucket", lsh_signature(F.col("vec"), n_planes, dim))
     )
-    _write_emb_store_meta(path, n_planes, dim, threshold)
+    _EMB.write_meta(path, n_planes=n_planes, dim=dim, threshold=threshold)
     # groups / exact / reps depend only on the checkpointed grp —
-    # independent, concurrently submitted (guide §2.6)
-    from read_comp_data_pipeline_spark.operators.dedup import _par_jobs
-
-    _par_jobs(
-        lambda: grp.write.mode("overwrite").parquet(f"{path}/groups"),
-        lambda: exact.write.mode("overwrite").parquet(f"{path}/exact_edges"),
-        lambda: reps.withColumn("ek", _ek_expr())
-        .write.mode("overwrite")
-        .partitionBy("ek")
-        .parquet(f"{path}/reps"),
-    )
+    # independent, written concurrently
+    _EMB.write(path, groups=grp, exact_edges=exact, reps=reps.withColumn("ek", _ek_expr()))
     # known rep-rep edges from the JUST-WRITTEN reps relation — its stored
     # `bucket` IS the deterministic lsh_signature, so the edge pass reads
     # thin parquet instead of re-running collapse + signature
     reps_r = emb.sparkSession.read.parquet(f"{path}/reps")
-    _bucket_self_edges(reps_r, threshold).write.mode("overwrite").parquet(
-        f"{path}/edges"
-    )
+    _EMB.write(path, edges=_bucket_self_edges(reps_r, threshold))
 
 
 def _bucket_self_edges(reps: DataFrame, threshold: float) -> DataFrame:
@@ -596,45 +576,16 @@ def _bucket_self_edges(reps: DataFrame, threshold: float) -> DataFrame:
 
 
 def _emb_incremental_state(
-    delta: DataFrame,
-    store_path: str,
-    id_col: str,
-    vec_col: str,
-    n_planes: int,
-    dim: int,
-    threshold: float,
+    delta: DataFrame, store_path: str, id_col: str, vec_col: str
 ) -> dict[str, DataFrame]:
     """Shared machinery for :func:`incremental_embedding_near_dups` (needs
     ``out``) and :func:`update_embedding_store` (needs the relations).
-    Mirrors dedup._incremental_state's contract: value-exact equality with
-    the batch pipeline on the union, work proportional to the delta."""
-    import json
-    import os
-
-    meta_path = os.path.join(store_path, "_store_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if (meta.get("n_planes"), meta.get("dim")) != (n_planes, dim):
-            raise ValueError(
-                f"embedding store at {store_path} was built with "
-                f"n_planes/dim={meta.get('n_planes')}/{meta.get('dim')}, "
-                f"got {n_planes}/{dim}"
-            )
-        # threshold gates which rep-rep edges the store PERSISTED — a
-        # looser delta threshold would silently miss every corpus-internal
-        # pair in [new, stored) (the batch-equality contract breaks with
-        # no error); a bucket-count change would prune the wrong ek files
-        if meta.get("threshold") is not None and float(meta["threshold"]) != float(threshold):
-            raise ValueError(
-                f"embedding store at {store_path} was built with "
-                f"threshold={meta['threshold']}, got {threshold}"
-            )
-        if meta.get("buckets") is not None and int(meta["buckets"]) != _EMB_STORE_BUCKETS:
-            raise ValueError(
-                f"embedding store at {store_path} was partitioned into "
-                f"{meta['buckets']} ek buckets; this build uses {_EMB_STORE_BUCKETS}"
-            )
+    Same contract as dedup._incremental_state: value-exact equality with
+    the batch pipeline on the union, work proportional to the delta, and
+    the LSH parameters and threshold read from the store's meta — the
+    persisted edges hold only pairs at or above the build threshold."""
+    p = _EMB.params(store_path)
+    n_planes, dim, threshold = p["n_planes"], p["dim"], p["threshold"]
 
     spark = delta.sparkSession
     groups_s = spark.read.parquet(f"{store_path}/groups")
@@ -646,54 +597,14 @@ def _emb_incremental_state(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
         _vec_hash(F.col(vec_col)).alias("vec_hash"),
     )
-    # ONE checkpoint for the seen-set join; known/new are filters over it
-    # (two separate checkpoints re-ran the corpus-side join twice and paid
-    # two actions for one epoch-sized relation)
-    dj = d.join(groups_s, on="vec_hash", how="left").localCheckpoint(eager=True)
-    known = dj.where(F.col("keeper_id").isNotNull())
-    new = dj.where(F.col("keeper_id").isNull()).drop("keeper_id")
+    fold = fold_delta(d, groups_s, exact_s, "vec_hash")
+    relabel = fold["relabel"]
 
-    # ── known vectors: group membership growth + keeper takeover ────────
-    kagg = known.groupBy("vec_hash").agg(F.min("id").alias("_delta_min"))
-    touched = (
-        groups_s.join(F.broadcast(kagg), on="vec_hash")
-        .withColumn("new_keeper", F.least("keeper_id", "_delta_min"))
-        .localCheckpoint(eager=True)
-    )
-    relabel = touched.where(F.col("new_keeper") != F.col("keeper_id")).select(
-        F.col("keeper_id").alias("_old"), F.col("new_keeper").alias("_new")
-    )
-    untouched_exact = exact_s.join(
-        F.broadcast(touched.select("vec_hash")), on="vec_hash", how="left_anti"
-    )
-    members = (
-        touched.select("vec_hash", F.col("keeper_id").alias("m"))
-        .unionByName(
-            exact_s.join(F.broadcast(touched.select("vec_hash")), on="vec_hash")
-            .select("vec_hash", F.col("id_b").alias("m"))
-        )
-        .unionByName(known.select("vec_hash", F.col("id").alias("m")))
-    )
-    touched_exact = (
-        members.join(F.broadcast(touched.select("vec_hash", "new_keeper")), on="vec_hash")
-        .where(F.col("m") != F.col("new_keeper"))
-        .select("vec_hash", F.col("new_keeper").alias("id_a"), F.col("m").alias("id_b"))
-    )
-
-    # ── new vectors: collapse within the delta, bucket, verify ──────────
-    new_keepers = new.groupBy("vec_hash").agg(F.min("id").alias("id"))
+    # ── new vectors: bucket the delta's new reps, verify ────────────────
     new_reps = (
-        new.join(new_keepers, on=["vec_hash", "id"], how="left_semi")
-        .select("vec_hash", "id", "vec")
+        fold["new_rows"].select("vec_hash", "id", "vec")
         .withColumn("bucket", lsh_signature(F.col("vec"), n_planes, dim))
         .localCheckpoint(eager=True)
-    )
-    new_exact = (
-        new.join(
-            F.broadcast(new_keepers.withColumnRenamed("id", "_k")), on="vec_hash"
-        )
-        .where(F.col("id") != F.col("_k"))
-        .select("vec_hash", F.col("_k").alias("id_a"), F.col("id").alias("id_b"))
     )
     # static partition pruning on the store's reps files: the delta's own
     # bucket-hash set is bounded by _EMB_STORE_BUCKETS (same pattern as
@@ -723,47 +634,15 @@ def _emb_incremental_state(
     )
     near_new = cross_edges.unionByName(within_edges)
 
-    # ── relabel takeover keepers in every rep-level edge ────────────────
-    def _relabel(e: DataFrame) -> DataFrame:
-        e = e.join(
-            F.broadcast(relabel.withColumnRenamed("_old", "id_a").withColumnRenamed("_new", "_na")),
-            on="id_a", how="left",
-        ).join(
-            F.broadcast(relabel.withColumnRenamed("_old", "id_b").withColumnRenamed("_new", "_nb")),
-            on="id_b", how="left",
-        )
-        a2 = F.coalesce(F.col("_na"), F.col("id_a"))
-        b2 = F.coalesce(F.col("_nb"), F.col("id_b"))
-        return e.select(
-            F.least(a2, b2).alias("id_a"), F.greatest(a2, b2).alias("id_b"), "cosine"
-        )
-
-    near_all = _relabel(edges_s.unionByName(near_new))
-    exact_all = untouched_exact.unionByName(touched_exact).unionByName(new_exact)
+    near_all = relabel_edges(edges_s.unionByName(near_new), relabel, "cosine")
     out = near_all.unionByName(
-        exact_all.select("id_a", "id_b", F.lit(1.0).alias("cosine"))
+        fold["exact_edges"].select("id_a", "id_b", F.lit(1.0).alias("cosine"))
     )
-
-    def _relabel_ids(rel: DataFrame) -> DataFrame:
-        return rel.join(
-            F.broadcast(relabel.withColumnRenamed("_old", "id")), on="id", how="left"
-        ).select(
-            F.coalesce(F.col("_new"), F.col("id")).alias("id"),
-            *[c for c in rel.columns if c != "id"],
-        )
-
-    groups_u = groups_s.join(
-        F.broadcast(touched.select("vec_hash", "new_keeper")),
-        on="vec_hash", how="left",
-    ).select(
-        "vec_hash",
-        F.coalesce(F.col("new_keeper"), F.col("keeper_id")).alias("keeper_id"),
-    ).unionByName(new_keepers.select("vec_hash", F.col("id").alias("keeper_id")))
     return {
         "out": out,
-        "groups": groups_u,
-        "exact_edges": exact_all,
-        "reps": _relabel_ids(reps_s.select("id", "vec", "bucket")).unionByName(
+        "groups": fold["groups"],
+        "exact_edges": fold["exact_edges"],
+        "reps": relabel_ids(reps_s.select("id", "vec", "bucket"), relabel).unionByName(
             new_reps.select("id", "vec", "bucket")
         ),
         "edges": near_all,
@@ -776,20 +655,15 @@ def incremental_embedding_near_dups(
     store_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_planes: int = 6,
-    dim: int = 64,
-    threshold: float = 0.30,
 ) -> DataFrame:
     """Embedding near-dup edge set of (corpus ∪ delta), computed by
     bucketing ONLY the delta against a persisted
     :func:`build_embedding_store` — value-exact equal to
-    :func:`embedding_near_dup_lsh` on the full union (collapse semantics
-    included), while signature/cosine work is proportional to the delta;
-    the corpus's vectors are read only from the store's pruned candidate
-    buckets, never rescanned wholesale."""
-    return _emb_incremental_state(
-        delta, store_path, id_col, vec_col, n_planes, dim, threshold
-    )["out"]
+    :func:`embedding_near_dup_lsh` on the full union at the store's build
+    parameters (collapse semantics included), while signature/cosine work
+    is proportional to the delta; the corpus's vectors are read only from
+    the store's pruned candidate buckets, never rescanned wholesale."""
+    return _emb_incremental_state(delta, store_path, id_col, vec_col)["out"]
 
 
 def update_embedding_store(
@@ -798,33 +672,18 @@ def update_embedding_store(
     out_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_planes: int = 6,
-    dim: int = 64,
-    threshold: float = 0.30,
 ) -> None:
     """Fold a processed delta INTO the embedding store, producing the store
-    of (corpus ∪ delta) at ``out_path`` — chains epoch over epoch; identical
-    to rebuilding from the union (tested), but only delta rows are computed
-    fresh."""
-    import os
-
-    if os.path.abspath(out_path) == os.path.abspath(store_path):
-        raise ValueError("out_path must differ from store_path (snapshot-style update)")
-    st = _emb_incremental_state(
-        delta, store_path, id_col, vec_col, n_planes, dim, threshold
-    )
-    _write_emb_store_meta(out_path, n_planes, dim, threshold)
-    from read_comp_data_pipeline_spark.operators.dedup import _par_jobs
-
-    _par_jobs(
-        lambda: st["groups"].write.mode("overwrite").parquet(f"{out_path}/groups"),
-        lambda: st["exact_edges"].write.mode("overwrite").parquet(
-            f"{out_path}/exact_edges"
-        ),
-        lambda: st["reps"]
-        .withColumn("ek", _ek_expr())
-        .write.mode("overwrite")
-        .partitionBy("ek")
-        .parquet(f"{out_path}/reps"),
-        lambda: st["edges"].write.mode("overwrite").parquet(f"{out_path}/edges"),
+    of (corpus ∪ delta) at ``out_path`` with the same build parameters —
+    chains epoch over epoch; identical to rebuilding from the union
+    (tested), but only delta rows are computed fresh."""
+    check_out_path(store_path, out_path)
+    st = _emb_incremental_state(delta, store_path, id_col, vec_col)
+    _EMB.write_meta(out_path, **_EMB.params(store_path))
+    _EMB.write(
+        out_path,
+        groups=st["groups"],
+        exact_edges=st["exact_edges"],
+        reps=st["reps"].withColumn("ek", _ek_expr()),
+        edges=st["edges"],
     )

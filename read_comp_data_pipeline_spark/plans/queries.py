@@ -16,6 +16,8 @@ Scale notes are attached per query; the common ones:
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -50,6 +52,15 @@ from read_comp_data_pipeline_spark.schemas import TARGET_SCHEMA
 from read_comp_data_pipeline_spark.sources.tables import load
 from read_comp_data_pipeline_spark.streaming.ingest import prepare_target_rows
 from read_comp_data_pipeline_spark.operators.compact import compact_latest
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A new temporary directory, removed when the process exits. Queries
+    build tables and stores here on the way to a lazy DataFrame, which
+    reads them whenever it is consumed, so they must outlive the call."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def _dsum(col, scale: int = 4):
@@ -166,7 +177,7 @@ def cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # loop of thousands of tiny epochs at 100×
     n = wal.agg(F.max("seq")).first()[0] or 0
     epoch_size = max(2500, (int(n) + 1) // 16 + 1)
-    tbl_path = tempfile.mkdtemp(prefix="cdc_replay_")
+    tbl_path = _scratch_dir("cdc_replay_")
     table = HashMergeTable.create(spark, tbl_path, TARGET_SCHEMA, n_buckets=8)
     for epoch in range(int(n) // epoch_size + 1):
         lo, hi = epoch * epoch_size, (epoch + 1) * epoch_size - 1
@@ -394,7 +405,7 @@ def _two_phase_replay(spark: SparkSession, sf_dir: str, prefix: str):
     )
     n = int(wal.agg(F.max("seq")).first()[0] or 0)
     mid = n // 2
-    tbl_path = tempfile.mkdtemp(prefix=prefix)
+    tbl_path = _scratch_dir(prefix)
     table = HashMergeTable.create(spark, tbl_path, TARGET_SCHEMA, n_buckets=8)
 
     def apply_range(lo_all: int, hi_all: int, first_epoch: int) -> int:
@@ -489,7 +500,7 @@ def cdc_partial_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     table = HashMergeTable.create(
-        spark, tempfile.mkdtemp(prefix="cdc_partial_"), schema, n_buckets=8, mode="cow"
+        spark, _scratch_dir("cdc_partial_"), schema, n_buckets=8, mode="cow"
     )
     for epoch in range(n // epoch_size + 1):
         lo, hi = epoch * epoch_size, (epoch + 1) * epoch_size - 1
@@ -2214,9 +2225,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     corpus = d.where(F.pmod(F.col("doc_id"), F.lit(5)) != 0)
     delta = d.where(F.pmod(F.col("doc_id"), F.lit(5)) == 0)
-    store = tempfile.mkdtemp(prefix="sigstore_q_")
+    store = _scratch_dir("sigstore_q_")
     build_signature_store(corpus, store, n=5, k=16, bands=4, threshold=0.4)
-    out = incremental_near_dups(delta, store, n=5, k=16, bands=4, threshold=0.4)
+    out = incremental_near_dups(delta, store)
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -2594,7 +2605,7 @@ def paragraph_dedup_incremental_query(spark: SparkSession, sf_dir: str) -> DataF
     )
     corpus = chrome.where(F.pmod(F.col("doc_id"), F.lit(5)) != 0)
     delta = chrome.where(F.pmod(F.col("doc_id"), F.lit(5)) == 0)
-    store = tempfile.mkdtemp(prefix="pstore_q_")
+    store = _scratch_dir("pstore_q_")
     _build_pstore(corpus, store)
     return _paragraph_dedup_inc(delta, store)
 
@@ -2623,11 +2634,9 @@ def emb_near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     corpus = emb.where(F.pmod(F.col("vec_id"), F.lit(5)) != 0)
     delta = emb.where(F.pmod(F.col("vec_id"), F.lit(5)) == 0)
-    store = tempfile.mkdtemp(prefix="embstore_q_")
+    store = _scratch_dir("embstore_q_")
     build_embedding_store(corpus, store, threshold=0.30, n_planes=6, dim=64)
-    return incremental_embedding_near_dups(
-        delta, store, threshold=0.30, n_planes=6, dim=64
-    )
+    return incremental_embedding_near_dups(delta, store)
 
 
 @_q(

@@ -108,8 +108,8 @@ def stream_ingest(
             # the new rows and no-ops the replayed ones
             compacted = compact_latest(batch_df, strategy=strategy)
             if n >= 500_000:
-                # big batch: move the bucket shuffle before the UDF so
-                # extraction parallelism doesn't depend on file layout
+                # big batch: move the bucket shuffle before extraction so
+                # its parallelism doesn't depend on file layout
                 compacted = prebucket_for_merge(
                     compacted, table.n_buckets,
                     spark.sparkContext.defaultParallelism,

@@ -79,7 +79,7 @@ def test_incremental_equals_batch_on_union(spark):
     corpus, delta = _corpus_and_delta(spark)
     store = tempfile.mkdtemp(prefix="sigstore_")
     build_signature_store(corpus, store, **PARAMS)
-    inc = _edge_set(incremental_near_dups(delta, store, **PARAMS))
+    inc = _edge_set(incremental_near_dups(delta, store))
     batch = _edge_set(minhash_near_dups(corpus.unionByName(delta), **PARAMS))
     assert inc == batch
     # takeover re-rooted the exact star: 50 is the keeper of group A now
@@ -97,7 +97,7 @@ def test_incremental_noop_delta_returns_store_edges(spark):
     store = tempfile.mkdtemp(prefix="sigstore_")
     build_signature_store(corpus, store, **PARAMS)
     empty = corpus.where(F.lit(False))
-    inc = _edge_set(incremental_near_dups(empty, store, **PARAMS))
+    inc = _edge_set(incremental_near_dups(empty, store))
     batch = _edge_set(minhash_near_dups(corpus, **PARAMS))
     assert inc == batch
 
@@ -115,7 +115,7 @@ def test_incremental_plan_never_scans_corpus_text(spark):
     delta.write.parquet(delta_path)
     build_signature_store(spark.read.parquet(corpus_path), store, **PARAMS)
 
-    out = incremental_near_dups(spark.read.parquet(delta_path), store, **PARAMS)
+    out = incremental_near_dups(spark.read.parquet(delta_path), store)
     import contextlib
     import io
 
@@ -155,8 +155,8 @@ def test_store_update_chains_epochs(spark):
     root = tempfile.mkdtemp(prefix="chain_")
     s0, s1 = os.path.join(root, "s0"), os.path.join(root, "s1")
     build_signature_store(corpus, s0, **PARAMS)
-    update_signature_store(delta1, s0, s1, **PARAMS)
-    inc = _edge_set(incremental_near_dups(delta2, s1, **PARAMS))
+    update_signature_store(delta1, s0, s1)
+    inc = _edge_set(incremental_near_dups(delta2, s1))
     batch = _edge_set(
         minhash_near_dups(corpus.unionByName(delta1).unionByName(delta2), **PARAMS)
     )
@@ -174,7 +174,7 @@ def test_updated_store_equals_rebuilt_store(spark):
     root = tempfile.mkdtemp(prefix="storeeq_")
     s0, s1, sref = (os.path.join(root, x) for x in ("s0", "s1", "sref"))
     build_signature_store(corpus, s0, **PARAMS)
-    update_signature_store(delta, s0, s1, **PARAMS)
+    update_signature_store(delta, s0, s1)
     build_signature_store(corpus.unionByName(delta), sref, **PARAMS)
     for rel in ["groups", "exact_edges", "bands", "shingles", "edges"]:
         got = {tuple(r) for r in spark.read.parquet(f"{s1}/{rel}").collect()}
@@ -203,9 +203,7 @@ def test_incremental_prunes_store_partitions_on_disk(spark):
     )
     store = tempfile.mkdtemp(prefix="prunestore_")
     build_signature_store(corpus, store, **PARAMS)
-    st = _incremental_state(delta, store, "text", "doc_id",
-                            PARAMS["n"], PARAMS["k"], PARAMS["bands"],
-                            PARAMS["threshold"])
+    st = _incremental_state(delta, store, "text", "doc_id")
 
     def files(df):
         return {r["f"] for r in
@@ -233,15 +231,26 @@ def test_incremental_prunes_store_partitions_on_disk(spark):
     assert "bk" in buf.getvalue().split("PartitionFilters")[1][:120]
 
 
-def test_store_parameter_mismatch_fails_loudly(spark):
-    """A store is only joinable under the parameters it was built with —
-    different shingle/band parameters silently lose recall, so the meta
-    guard must raise."""
-    import pytest
+def test_cli_dedup_delta_reads_threshold_from_store(spark, tmp_path):
+    """dedup-delta takes its parameters from the store it reads: a store
+    built at --threshold 0.5 yields the batch edges at 0.5, including a
+    cross pair below the old CLI default of 0.7."""
+    from read_comp_data_pipeline_spark.__main__ import main
 
     corpus, delta = _corpus_and_delta(spark)
-    store = tempfile.mkdtemp(prefix="metastore_")
-    build_signature_store(corpus, store, **PARAMS)
-    with pytest.raises(ValueError, match="was built with"):
-        incremental_near_dups(delta, store, n=7, k=PARAMS["k"],
-                              bands=PARAMS["bands"], threshold=0.5)
+    B = _words("beta")
+    delta = delta.unionByName(spark.createDataFrame(
+        [(206, _variant(_variant(B, 8, "m1"), 25, "m2"))],  # vs 103: J ≈ 0.57
+        "doc_id long, text string",
+    ))
+    cdir, ddir, store, edges = (str(tmp_path / x) for x in ("c", "d", "s", "e"))
+    corpus.write.parquet(cdir)
+    delta.write.parquet(ddir)
+    assert main(["dedup-store", "--docs", cdir, "--store", store,
+                 "--threshold", "0.5"]) == 0
+    assert main(["dedup-delta", "--docs", ddir, "--store", store,
+                 "--edges-out", edges]) == 0
+    got = _edge_set(spark.read.parquet(edges))
+    batch = _edge_set(minhash_near_dups(corpus.unionByName(delta), **PARAMS))
+    assert got == batch
+    assert any(a == 103 and b == 206 and j < 0.7 for a, b, j in got)

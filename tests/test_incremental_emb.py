@@ -77,7 +77,7 @@ def test_emb_incremental_equals_batch_on_union(spark):
     corpus, delta = _corpus_and_delta(spark)
     store = tempfile.mkdtemp(prefix="embstore_")
     build_embedding_store(corpus, store, **PARAMS)
-    inc = _edge_set(incremental_embedding_near_dups(delta, store, **PARAMS))
+    inc = _edge_set(incremental_embedding_near_dups(delta, store))
     batch = _edge_set(embedding_near_dup_lsh(corpus.unionByName(delta), **PARAMS))
     assert inc == batch
     # takeover re-rooted the exact star: 50 is the keeper of group A now
@@ -91,7 +91,7 @@ def test_emb_incremental_empty_delta_returns_store_edges(spark):
     store = tempfile.mkdtemp(prefix="embstore_")
     build_embedding_store(corpus, store, **PARAMS)
     empty = corpus.where(F.lit(False))
-    inc = _edge_set(incremental_embedding_near_dups(empty, store, **PARAMS))
+    inc = _edge_set(incremental_embedding_near_dups(empty, store))
     batch = _edge_set(embedding_near_dup_lsh(corpus, **PARAMS))
     assert inc == batch
 
@@ -113,8 +113,8 @@ def test_emb_store_update_chains_epochs(spark):
     root = tempfile.mkdtemp(prefix="embchain_")
     s0, s1 = os.path.join(root, "s0"), os.path.join(root, "s1")
     build_embedding_store(corpus, s0, **PARAMS)
-    update_embedding_store(delta1, s0, s1, **PARAMS)
-    inc = _edge_set(incremental_embedding_near_dups(delta2, s1, **PARAMS))
+    update_embedding_store(delta1, s0, s1)
+    inc = _edge_set(incremental_embedding_near_dups(delta2, s1))
     batch = _edge_set(
         embedding_near_dup_lsh(
             corpus.unionByName(delta1).unionByName(delta2), **PARAMS
@@ -129,7 +129,7 @@ def test_emb_updated_store_equals_rebuilt_store(spark):
     root = tempfile.mkdtemp(prefix="embeq_")
     s0, s1, sref = (os.path.join(root, x) for x in ("s0", "s1", "sref"))
     build_embedding_store(corpus, s0, **PARAMS)
-    update_embedding_store(delta, s0, s1, **PARAMS)
+    update_embedding_store(delta, s0, s1)
     build_embedding_store(corpus.unionByName(delta), sref, **PARAMS)
     spark = corpus.sparkSession
     for rel in ["groups", "exact_edges", "edges"]:
@@ -164,7 +164,7 @@ def test_emb_incremental_never_scans_corpus_vectors(spark):
     corpus.write.parquet(corpus_path)
     build_embedding_store(spark.read.parquet(corpus_path), store, **PARAMS)
 
-    out = incremental_embedding_near_dups(delta, store, **PARAMS)
+    out = incremental_embedding_near_dups(delta, store)
     import contextlib
     import io
 
@@ -176,10 +176,7 @@ def test_emb_incremental_never_scans_corpus_vectors(spark):
     assert "store" in plan
 
     # on-disk pruning: the reps scan reads a strict subset of store files
-    st = _emb_incremental_state(
-        delta, store, "vec_id", "embedding",
-        PARAMS["n_planes"], PARAMS["dim"], PARAMS["threshold"],
-    )
+    st = _emb_incremental_state(delta, store, "vec_id", "embedding")
 
     def files(df):
         return {r["f"] for r in
@@ -202,21 +199,8 @@ def test_emb_store_parameter_mismatch_fails_loudly(spark):
     corpus, delta = _corpus_and_delta(spark)
     store = tempfile.mkdtemp(prefix="embmeta_")
     build_embedding_store(corpus, store, **PARAMS)
-    with pytest.raises(ValueError, match="n_planes/dim"):
-        incremental_embedding_near_dups(delta, store, n_planes=5, dim=8, threshold=0.9)
     with pytest.raises(ValueError, match="must differ"):
-        update_embedding_store(delta, store, store, **PARAMS)
-
-
-def test_emb_store_threshold_mismatch_fails_loudly(spark):
-    """The store's persisted edges relation only contains rep-rep pairs at
-    or above the BUILD threshold — a looser delta threshold would silently
-    miss every corpus-internal pair below it, so the meta guard raises."""
-    corpus, delta = _corpus_and_delta(spark)
-    store = tempfile.mkdtemp(prefix="embthr_")
-    build_embedding_store(corpus, store, n_planes=3, dim=8, threshold=0.9)
-    with pytest.raises(ValueError, match="threshold"):
-        incremental_embedding_near_dups(delta, store, n_planes=3, dim=8, threshold=0.5)
+        update_embedding_store(delta, store, store)
 
 
 def test_emb_vec_hash_keeps_null_positions_and_double_precision(spark):
@@ -254,5 +238,5 @@ def test_emb_incremental_emits_no_self_pairs_on_id_reuse(spark):
     )
     store = tempfile.mkdtemp(prefix="embself_")
     build_embedding_store(corpus, store, **PARAMS)
-    out = incremental_embedding_near_dups(delta, store, **PARAMS)
+    out = incremental_embedding_near_dups(delta, store)
     assert out.where(F.col("id_a") == F.col("id_b")).count() == 0
