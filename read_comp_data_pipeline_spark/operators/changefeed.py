@@ -41,6 +41,8 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from read_comp_data_pipeline_spark.operators.merge import atomic_write
+
 _CURSOR = "CURSOR"
 
 
@@ -53,15 +55,10 @@ def read_cursor(out_path: str) -> dict[str, Any] | None:
 
 
 def _write_cursor(out_path: str, cursor: dict[str, Any]) -> None:
-    # same flush+fsync-then-rename discipline as the table's snapshot
-    # pointer: a torn/empty cursor would wedge the feed (or worse, a lost
-    # one would re-bootstrap and double-deliver every live row)
-    tmp = os.path.join(out_path, _CURSOR + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(cursor, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(out_path, _CURSOR))
+    # atomic like the table's snapshot pointer: a torn/empty cursor would
+    # wedge the feed (or worse, a lost one would re-bootstrap and
+    # double-deliver every live row)
+    atomic_write(os.path.join(out_path, _CURSOR), json.dumps(cursor))
 
 
 def window_dirs(out_path: str) -> list[str]:

@@ -143,9 +143,8 @@ def sync_agg_view(
     """
     import json
     import os
-    import uuid
 
-    from read_comp_data_pipeline_spark.operators.merge import HashMergeTable
+    from read_comp_data_pipeline_spark.operators.merge import HashMergeTable, atomic_write
 
     sum_cols = sum_cols or {}
     val_cols = [count_alias, *sum_cols.values()]
@@ -265,11 +264,8 @@ def sync_agg_view(
     # the view commit: a crash in between leaves a stale sidecar whose
     # version mismatch simply forces a full recompute next sync — safe,
     # never wrong.
-    tmp = os.path.join(view_path, f".sync_meta.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(
-            {"src_epoch": src_epoch, "src_version": int(src_snap.get("version", -1))},
-            f,
-        )
-    os.replace(tmp, os.path.join(view_path, "_sync_meta.json"))
+    atomic_write(
+        os.path.join(view_path, "_sync_meta.json"),
+        json.dumps({"src_epoch": src_epoch, "src_version": int(src_snap.get("version", -1))}),
+    )
     return view

@@ -38,6 +38,14 @@ the exact statement the engine issues when one is present):
   metadata-only snapshot commit; old data files are read with the schema
   they were written with and aligned (cast + null-fill) at scan time.
 * **time travel.** Old snapshots are retained; ``read(at_snapshot=...)``.
+* **one commit path.** Every commit (epoch, DDL, maintenance, rollback)
+  runs in one order: data files → side-table rows → ``pre_commit`` →
+  snapshot file → pointer swing (``CURRENT``, or ``STAGING`` for a staged
+  epoch). The last two are :meth:`HashMergeTable._commit`, and every
+  metadata file is written by :func:`atomic_write`. A snapshot file whose
+  version is above both pointers comes from a commit interrupted before
+  its swing: it is not committed, :meth:`HashMergeTable.snapshots` does
+  not list it, and the next commit of that version overwrites it.
 
 MERGE semantics (per epoch, source already compacted to ≤1 row/key,
 per-key seq-aware — replays of any subset in any order are no-ops):
@@ -100,6 +108,36 @@ def bucket_expr(n_buckets: int, key_cols: list[str] | None = None):
         (n_buckets, key_cols),
         lambda: F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int"),
     )
+
+
+def atomic_write(path: str, data: str | bytes) -> None:
+    """Replace ``path`` with ``data`` through a uniquely named temp file in
+    the same directory: write, flush, fsync, rename. A reader or a crash
+    sees the old file or the new one, never a torn one."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "wb" if isinstance(data, bytes) else "w") as f:
+        f.write(data)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def _parquet_bytes(table) -> bytes:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    return buf.getvalue().to_pybytes()
+
+
+def _side_epoch(name: str) -> int | None:
+    """The epoch of a per-epoch side file ``e{epoch}.parquet``, else None
+    (segments, temp files)."""
+    if name.startswith("e") and name.endswith(".parquet") and name[1:-8].isdigit():
+        return int(name[1:-8])
+    return None
 
 
 def _globs(dirs: list[str]) -> list[str]:
@@ -214,6 +252,16 @@ def _snap_field_ids(snap: dict[str, Any]) -> tuple[list[list[int]], int]:
     return ids, len(name_to_id) + 1
 
 
+def _push_schema(
+    snap: dict[str, Any], schema: T.StructType, field_ids: list[int], next_id: int
+) -> None:
+    """Append a schema generation with its field IDs and make it current."""
+    ids, _ = _snap_field_ids(snap)
+    snap["schemas"].append(json.loads(schema.json()))
+    snap["field_ids"], snap["next_field_id"] = ids + [list(field_ids)], next_id
+    snap["current_schema_id"] = len(snap["schemas"]) - 1
+
+
 def _align_by_id(
     df: DataFrame,
     written: T.StructType,
@@ -299,7 +347,7 @@ class HashMergeTable:
         os.makedirs(os.path.join(path, "snapshots"), exist_ok=True)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         snap = {
-            "version": 0,
+            "version": -1,  # _commit makes it 0
             "epoch": -1,
             "mode": mode,
             "order_col": order_col,
@@ -319,43 +367,50 @@ class HashMergeTable:
             "constraints": dict(constraints) if constraints else {},
         }
         t = cls(spark, path)
-        t._commit_snapshot(snap)
+        t._commit(snap)
         return t
 
     @classmethod
     def exists(cls, path: str) -> bool:
         return os.path.exists(os.path.join(path, _CURRENT))
 
-    def _snapshot(self) -> dict[str, Any]:
-        with open(os.path.join(self.path, _CURRENT)) as f:
-            name = f.read().strip()
+    def _pointer(self, pointer: str) -> str | None:
+        """The snapshot file name a pointer file holds, or None."""
+        p = os.path.join(self.path, pointer)
+        if not os.path.exists(p):
+            return None
+        with open(p) as f:
+            return f.read().strip()
+
+    def _load(self, name: str) -> dict[str, Any]:
         with open(os.path.join(self.path, "snapshots", name)) as f:
             return json.load(f)
 
-    def _commit_snapshot(self, snap: dict[str, Any], pointer: str = _CURRENT) -> None:
-        """Write snapshot JSON then atomically swing the ``pointer`` file
-        (CURRENT for a published commit; STAGING for a write-audit-publish
-        staged commit — invisible to readers until :meth:`publish_staged`).
+    def _snapshot(self) -> dict[str, Any]:
+        with open(os.path.join(self.path, _CURRENT)) as f:
+            return self._load(f.read().strip())
 
-        A crash before the final ``os.replace`` leaves the table at the
-        previous snapshot (orphan data files are harmless and vacuumable);
-        a crash after it means the commit fully happened. This ordering is
-        the exactly-once foundation (SURVEY.md §2.9).
+    def _begin_commit(self) -> dict[str, Any]:
+        """The current snapshot, for a DDL or maintenance commit to build
+        on; refuses while a staged snapshot is pending."""
+        self._check_staging_clear(-1, False)
+        return self._snapshot()
+
+    def _commit(self, snap: dict[str, Any], stage: bool = False) -> None:
+        """The one commit point: bump the version, write the snapshot file,
+        then atomically swing CURRENT (or STAGING for a write-audit-publish
+        staged commit, invisible to readers until :meth:`publish_staged`).
+
+        A crash before the swing leaves the table at the previous snapshot:
+        the new snapshot file is above every pointer, so :meth:`snapshots`
+        does not list it, and orphan data files are vacuumable. A crash
+        after it means the commit fully happened. This ordering is the
+        exactly-once foundation (SURVEY.md §2.9).
         """
+        snap["version"] += 1
         name = f"snap-{snap['version']:08d}.json"
-        snap_dir = os.path.join(self.path, "snapshots")
-        tmp = os.path.join(snap_dir, f".{name}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(snap, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(snap_dir, name))
-        cur_tmp = os.path.join(self.path, f".{pointer}.{uuid.uuid4().hex}.tmp")
-        with open(cur_tmp, "w") as f:
-            f.write(name)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(cur_tmp, os.path.join(self.path, pointer))
+        atomic_write(os.path.join(self.path, "snapshots", name), json.dumps(snap))
+        atomic_write(os.path.join(self.path, _STAGING if stage else _CURRENT), name)
 
     # -- properties -----------------------------------------------------------
 
@@ -382,40 +437,47 @@ class HashMergeTable:
 
     # -- read path ------------------------------------------------------------
 
-    def _read_base(self, snap: dict, buckets: list[int] | None) -> DataFrame:
+    def _scan_generations(
+        self, snap: dict, by_schema: dict[int, list[str]], keep: tuple[str, ...] = ()
+    ) -> DataFrame | None:
+        """One scan per schema generation over its dirs, aligned by field ID
+        to the current schema and unioned in generation order; ``keep``
+        names string columns stored beside the data (the deltas' ``op``).
+        None when there are no dirs."""
         cur_schema = T.StructType.fromJson(snap["schemas"][snap["current_schema_id"]])
+        ids, _ = _snap_field_ids(snap)
+        cur_ids = ids[snap["current_schema_id"]]
+        out = None
+        for sid, dirs in sorted(by_schema.items()):
+            written = T.StructType.fromJson(snap["schemas"][sid])
+            scanned = T.StructType(
+                list(written.fields) + [T.StructField(k, T.StringType(), True) for k in keep]
+            )
+            part = _align_by_id(
+                self.spark.read.schema(scanned).parquet(*_globs(dirs)),
+                written, ids[sid], cur_schema, cur_ids, keep=keep,
+            )
+            out = part if out is None else out.unionByName(part)
+        return out
+
+    def _read_base(self, snap: dict, buckets: list[int] | None) -> DataFrame:
         entries = snap["buckets"]
         if buckets is not None:
             wanted = {str(b) for b in buckets}
             entries = {b: e for b, e in entries.items() if b in wanted}
-        # group bucket dirs by the schema they were written with: one scan
-        # per schema generation, aligned to the current schema, unioned.
         by_schema: dict[int, list[str]] = {}
         for e in entries.values():
             by_schema.setdefault(e["schema_id"], []).append(os.path.join(self.path, e["dir"]))
-        if not by_schema:
+        out = self._scan_generations(snap, by_schema)
+        if out is None:
+            cur_schema = T.StructType.fromJson(snap["schemas"][snap["current_schema_id"]])
             return self.spark.createDataFrame([], cur_schema)
-        ids, _ = _snap_field_ids(snap)
-        cur_ids = ids[snap["current_schema_id"]]
-        parts = []
-        for sid, dirs in sorted(by_schema.items()):
-            written = T.StructType.fromJson(snap["schemas"][sid])
-            parts.append(
-                _align_by_id(
-                    self.spark.read.schema(written).parquet(*_globs(dirs)),
-                    written, ids[sid], cur_schema, cur_ids,
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
         return out
 
     def _read_deltas(self, snap: dict, buckets: list[int] | None) -> DataFrame | None:
         """Union of delta files (mor mode), aligned to the current schema
         with the ``op`` column retained. Bucket pruning = reading only the
         ``_b=N`` subdirectories that exist for the wanted buckets."""
-        cur_schema = T.StructType.fromJson(snap["schemas"][snap["current_schema_id"]])
         by_schema: dict[int, list[str]] = {}
         for d in snap.get("deltas", []):
             base_dir = os.path.join(self.path, d["dir"])
@@ -429,20 +491,7 @@ class HashMergeTable:
                 p = os.path.join(base_dir, n)
                 if os.path.isdir(p):
                     by_schema.setdefault(d["schema_id"], []).append(p)
-        if not by_schema:
-            return None
-        ids, _ = _snap_field_ids(snap)
-        cur_ids = ids[snap["current_schema_id"]]
-        out = None
-        for sid, dirs in sorted(by_schema.items()):
-            written = T.StructType.fromJson(snap["schemas"][sid])
-            written_op = T.StructType(list(written.fields) + [T.StructField("op", T.StringType(), True)])
-            part = _align_by_id(
-                self.spark.read.schema(written_op).parquet(*_globs(dirs)),
-                written, ids[sid], cur_schema, cur_ids, keep=("op",),
-            )
-            out = part if out is None else out.unionByName(part)
-        return out
+        return self._scan_generations(snap, by_schema, keep=("op",))
 
     def read(self, buckets: list[int] | None = None, at_snapshot: dict | None = None) -> DataFrame:
         """Scan the table (optionally only ``buckets`` — manual partition
@@ -583,8 +632,7 @@ class HashMergeTable:
         types). Returns True if a new snapshot was committed. Existing data
         files are untouched; reads align old files to the new schema.
         """
-        self._check_staging_clear(-1, False)
-        snap = self._snapshot()
+        snap = self._begin_commit()
         cur = T.StructType.fromJson(snap["schemas"][snap["current_schema_id"]])
         if cur.json() == new_schema.json():
             return False
@@ -598,12 +646,8 @@ class HashMergeTable:
             else:  # added column: fresh ID (a re-added dropped name is NEW)
                 new_ids.append(next_id)
                 next_id += 1
-        snap["schemas"].append(json.loads(new_schema.json()))
-        ids.append(new_ids)
-        snap["field_ids"], snap["next_field_id"] = ids, next_id
-        snap["current_schema_id"] = len(snap["schemas"]) - 1
-        snap["version"] += 1
-        self._commit_snapshot(snap)
+        _push_schema(snap, new_schema, new_ids, next_id)
+        self._commit(snap)
         return True
 
     def _constraints_referencing(self, snap: dict, col: str) -> list[str]:
@@ -625,8 +669,7 @@ class HashMergeTable:
         dropped first: constraint exprs are opaque SQL, and silently
         rewriting them is how engines corrupt expectations.
         """
-        self._check_staging_clear(-1, False)
-        snap = self._snapshot()
+        snap = self._begin_commit()
         cur = T.StructType.fromJson(snap["schemas"][snap["current_schema_id"]])
         names = [f.name for f in cur.fields]
         if old not in names:
@@ -651,16 +694,13 @@ class HashMergeTable:
                 for f in cur.fields
             ]
         )
-        snap["schemas"].append(json.loads(new_schema.json()))
-        ids.append(list(ids[snap["current_schema_id"]]))  # same IDs: rename only
-        snap["field_ids"], snap["next_field_id"] = ids, next_id
-        snap["current_schema_id"] = len(snap["schemas"]) - 1
+        # same IDs: rename only
+        _push_schema(snap, new_schema, ids[snap["current_schema_id"]], next_id)
         snap["key_cols"] = [new if c == old else c for c in snap["key_cols"]]
         if snap.get("order_col") == old:
             snap["order_col"] = new
         snap["sort_order"] = [new if c == old else c for c in snap.get("sort_order") or []]
-        snap["version"] += 1
-        self._commit_snapshot(snap)
+        self._commit(snap)
         return {"renamed": {old: new}, "version": snap["version"]}
 
     def drop_column(self, name: str) -> dict[str, Any]:
@@ -672,8 +712,7 @@ class HashMergeTable:
         Structural references block the drop (key/order/sort-order columns,
         CHECK constraints) — remove those first.
         """
-        self._check_staging_clear(-1, False)
-        snap = self._snapshot()
+        snap = self._begin_commit()
         cur = T.StructType.fromJson(snap["schemas"][snap["current_schema_id"]])
         names = [f.name for f in cur.fields]
         if name not in names:
@@ -695,12 +734,8 @@ class HashMergeTable:
         ids, next_id = _snap_field_ids(snap)
         cur_ids = ids[snap["current_schema_id"]]
         keep = [(f, i) for f, i in zip(cur.fields, cur_ids) if f.name != name]
-        snap["schemas"].append(json.loads(T.StructType([f for f, _ in keep]).json()))
-        ids.append([i for _, i in keep])
-        snap["field_ids"], snap["next_field_id"] = ids, next_id
-        snap["current_schema_id"] = len(snap["schemas"]) - 1
-        snap["version"] += 1
-        self._commit_snapshot(snap)
+        _push_schema(snap, T.StructType([f for f, _ in keep]), [i for _, i in keep], next_id)
+        self._commit(snap)
         return {"dropped": name, "version": snap["version"]}
 
     # -- the MERGE -------------------------------------------------------------
@@ -769,13 +804,13 @@ class HashMergeTable:
             affected = list(affected_buckets)
         else:
             affected = [r["_b"] for r in src.select("_b").distinct().collect()]
-        if not affected:
-            return self._commit_noop(snap, epoch, src_seq_lo, src_seq_hi, t0, pre_commit, stage)
-
-        merged = self._cow_plan(snap, src, op_col, affected, src_keys_broadcastable)
-        return self._commit_cow(
-            snap, merged, epoch, affected, src_seq_lo, src_seq_hi, t0,
-            src_rows, lag_events, pre_commit, stage,
+        rows = {}
+        if affected:
+            merged = self._cow_plan(snap, src, op_col, affected, src_keys_broadcastable)
+            rows = self._rewrite(snap, merged, f"data/e{epoch:010d}", affected)
+        return self._commit_epoch(
+            snap, epoch, rows, src_seq_lo, src_seq_hi, t0, src_rows, lag_events,
+            pre_commit, stage,
         )
 
     def merge_partial(
@@ -859,88 +894,86 @@ class HashMergeTable:
                 obs, "_bks",
                 lambda: [r["_b"] for r in folded.select("_b").distinct().collect()],
             ) or [])
-        if not affected:
-            return self._commit_noop(snap, epoch, src_seq_lo, src_seq_hi, t0, pre_commit, stage)
-        tgt = self.read(buckets=affected, at_snapshot=snap)
-        merged = apply_partial(
-            tgt, folded, value_cols, key_cols, snap.get("order_col", "seq"),
-            op_col, folded_broadcastable,
-        ).withColumn("_b", bucket_expr(n_buckets, key_cols))
-        return self._commit_cow(
-            snap, merged, epoch, affected, src_seq_lo, src_seq_hi, t0,
-            src_rows, lag_events, pre_commit, stage,
+        rows = {}
+        if affected:
+            tgt = self.read(buckets=affected, at_snapshot=snap)
+            merged = apply_partial(
+                tgt, folded, value_cols, key_cols, snap.get("order_col", "seq"),
+                op_col, folded_broadcastable,
+            ).withColumn("_b", bucket_expr(n_buckets, key_cols))
+            rows = self._rewrite(snap, merged, f"data/e{epoch:010d}", affected)
+        return self._commit_epoch(
+            snap, epoch, rows, src_seq_lo, src_seq_hi, t0, src_rows, lag_events,
+            pre_commit, stage,
         )
 
-    def _commit_cow(
-        self, snap, merged: DataFrame, epoch: int, affected: list[int],
-        src_seq_lo, src_seq_hi, t0, src_rows=None, lag_events=0, pre_commit=None,
-        stage: bool = False,
-    ) -> dict[str, Any]:
-        """Write a COW epoch's merged bucket set and commit the snapshot —
-        the shared tail of :meth:`merge` and :meth:`merge_partial`."""
-        data_dir = f"data/e{epoch:010d}"
+    def _rewrite(
+        self, snap: dict, df: DataFrame, data_dir: str, buckets: list[int] | None = None
+    ) -> dict[int, int]:
+        """Write ``df`` (carrying ``_b``) bucketed under ``data_dir``, read
+        the per-bucket row counts from the footers, and repoint the bucket
+        map: each of ``buckets`` (None: the whole map, replaced by every
+        bucket written) at its new dir, dropping those left empty. Returns
+        the row count per repointed bucket, empty ones included."""
         out_path = os.path.join(self.path, data_dir)
-        self._write_bucketed(snap, merged, len(affected), out_path)
-        # per-bucket lineage counts from the committed files: reading the
-        # partition column + footers only, never re-running the source plan
-        bucket_rows = self._written_bucket_counts(out_path)
-        applied_rows = int(src_rows) if src_rows is not None else sum(bucket_rows.values())
-
-        # new snapshot: affected buckets point at the new dirs; empty ones drop
-        new_buckets = dict(snap["buckets"])
-        committed_ts = time.time()
-        manifest_rows = []
-        for b in affected:
-            rows = bucket_rows.get(int(b), 0)
-            if rows > 0:
-                new_buckets[str(b)] = {
+        n_parts = snap["n_buckets"] if buckets is None else len(buckets)
+        self._write_bucketed(snap, df, n_parts, out_path)
+        written = self._written_bucket_counts(out_path)
+        rows = written if buckets is None else {int(b): written.get(int(b), 0) for b in buckets}
+        entries = {} if buckets is None else dict(snap["buckets"])
+        for b, n in rows.items():
+            if n > 0:
+                entries[str(b)] = {
                     "dir": f"{data_dir}/_b={b}",
                     "schema_id": snap["current_schema_id"],
-                    "rows": rows,
+                    "rows": n,
                 }
             else:
-                new_buckets.pop(str(b), None)
-            manifest_rows.append(
-                {
-                    "partition": int(b),
-                    "epoch": epoch,
-                    "committed_ts": committed_ts,
-                    "rows_applied": rows,
-                    "src_seq_lo": src_seq_lo,
-                    "src_seq_hi": src_seq_hi,
-                }
-            )
+                entries.pop(str(b), None)
+        snap["buckets"] = entries
+        return rows
+
+    def _commit_epoch(
+        self, snap, epoch: int, rows: dict[int, int], lo, hi, t0, src_rows=None,
+        lag_events=0, pre_commit=None, stage: bool = False,
+    ) -> dict[str, Any]:
+        """Commit one epoch whose data (if any) is written and referenced by
+        ``snap``: manifest and metrics rows, one per bucket in ``rows``,
+        then ``pre_commit``, then :meth:`_commit`. An empty epoch (no
+        ``rows``) records its seq range in one ``partition=-1`` manifest
+        row and writes no metrics file.
+
+        Side tables first, snapshot commit last: a crash in between leaves
+        orphan side files with epoch > snapshot.epoch, invisible to readers
+        and overwritten when the epoch is retried."""
+        applied = 0
+        if rows:
+            applied = int(src_rows) if src_rows is not None else sum(rows.values())
+        committed_ts = time.time()
         secs = time.monotonic() - t0
-        metrics_rows = [
-            {
-                "epoch": epoch,
-                "partition": int(b),
-                "events": bucket_rows.get(int(b), 0),
-                "bytes": 0,
-                "secs": secs,
-                "events_per_sec": (applied_rows / secs) if secs > 0 else 0.0,
-                "lag_events": int(lag_events),
-            }
-            for b in affected
-        ]
-        # side tables first, snapshot commit last: a crash in between leaves
-        # orphan side files with epoch > snapshot.epoch — invisible to
-        # readers and overwritten when the epoch is retried
-        self._append_manifest(epoch, manifest_rows)
-        self._append_metrics(epoch, metrics_rows)
-        snap["buckets"] = new_buckets
+        self._append_side_rows("manifest", epoch, [
+            {"partition": int(b), "epoch": epoch, "committed_ts": committed_ts,
+             "rows_applied": n, "src_seq_lo": lo, "src_seq_hi": hi}
+            for b, n in (rows or {-1: 0}).items()
+        ])
+        if rows:
+            self._append_side_rows("metrics", epoch, [
+                {"epoch": epoch, "partition": int(b), "events": n, "bytes": 0,
+                 "secs": secs, "events_per_sec": (applied / secs) if secs > 0 else 0.0,
+                 "lag_events": int(lag_events)}
+                for b, n in rows.items()
+            ])
         snap["epoch"] = epoch
-        if src_seq_hi is not None:
-            snap["seq_hi"] = max(int(snap.get("seq_hi", -1) or -1), int(src_seq_hi))
-        snap["version"] += 1
+        if hi is not None:
+            snap["seq_hi"] = max(int(snap.get("seq_hi", -1) or -1), int(hi))
         if pre_commit is not None:
             pre_commit()
-        self._commit_snapshot(snap, pointer=_STAGING if stage else _CURRENT)
+        self._commit(snap, stage)
         return {
             "skipped": False,
             "epoch": epoch,
-            "rows_applied": applied_rows,
-            "buckets_touched": len(affected),
+            "rows_applied": applied,
+            "buckets_touched": len(rows),
             "secs": secs,
         }
 
@@ -998,7 +1031,7 @@ class HashMergeTable:
         parse-checked here (F.expr parses lazily in PySpark 4, so the
         session parser is asked directly); unresolvable column references
         fail loudly at first enforcement."""
-        self._check_staging_clear(-1, False)
+        snap = self._begin_commit()
         try:
             parser = self.spark._jsparkSession.sessionState().sqlParser()
         except AttributeError:  # non-classic session (e.g. Connect)
@@ -1008,24 +1041,20 @@ class HashMergeTable:
                 parser.parseExpression(expr)
             except Exception as e:
                 raise ValueError(f"constraint {name!r} does not parse: {e}") from None
-        snap = self._snapshot()
         cons = dict(snap.get("constraints") or {})
         cons[str(name)] = str(expr)
         snap["constraints"] = cons
-        snap["version"] += 1
-        self._commit_snapshot(snap)
+        self._commit(snap)
         return {"constraints": cons}
 
     def drop_constraint(self, name: str) -> dict[str, Any]:
-        self._check_staging_clear(-1, False)
-        snap = self._snapshot()
+        snap = self._begin_commit()
         cons = dict(snap.get("constraints") or {})
         if name not in cons:
             raise KeyError(f"no constraint named {name!r}")
         del cons[name]
         snap["constraints"] = cons
-        snap["version"] += 1
-        self._commit_snapshot(snap)
+        self._commit(snap)
         return {"constraints": cons}
 
     def set_sort_order(
@@ -1051,8 +1080,7 @@ class HashMergeTable:
         Requires a non-empty table (there is nothing to sample cuts from)
         and sortable column types (numeric / string / timestamp / date).
         """
-        self._check_staging_clear(-1, False)
-        snap = self._snapshot()
+        snap = self._begin_commit()
         cur = T.StructType.fromJson(snap["schemas"][snap["current_schema_id"]])
         fields = {f.name: f for f in cur.fields}
         for c in sort_order or []:
@@ -1097,8 +1125,7 @@ class HashMergeTable:
             snap["sort_strategy"] = "linear"
             snap.pop("sort_cuts", None)
             snap.pop("sort_bits", None)
-        snap["version"] += 1
-        self._commit_snapshot(snap)
+        self._commit(snap)
         return {"sort_order": snap["sort_order"], "strategy": snap["sort_strategy"]}
 
     def _cow_plan(
@@ -1204,59 +1231,16 @@ class HashMergeTable:
                 .partitionBy("_b")
                 .parquet(out_path)
             )
-        bucket_rows = self._written_bucket_counts(out_path)
-        if sum(bucket_rows.values()) == 0:
-            return self._commit_noop(snap, epoch, lo, hi, t0, pre_commit, stage)
-        applied_rows = int(src_rows) if src_rows is not None else sum(bucket_rows.values())
-
-        committed_ts = time.time()
-        secs = time.monotonic() - t0
-        self._append_manifest(
-            epoch,
-            [
-                {
-                    "partition": int(b),
-                    "epoch": epoch,
-                    "committed_ts": committed_ts,
-                    "rows_applied": rows,
-                    "src_seq_lo": lo,
-                    "src_seq_hi": hi,
-                }
-                for b, rows in sorted(bucket_rows.items())
-            ],
+        rows = dict(sorted(self._written_bucket_counts(out_path).items()))
+        if sum(rows.values()):
+            snap["deltas"].append(
+                {"dir": data_dir, "schema_id": snap["current_schema_id"], "epoch": epoch}
+            )
+        else:
+            rows = {}  # nothing written: an empty epoch
+        return self._commit_epoch(
+            snap, epoch, rows, lo, hi, t0, src_rows, lag_events, pre_commit, stage
         )
-        self._append_metrics(
-            epoch,
-            [
-                {
-                    "epoch": epoch,
-                    "partition": int(b),
-                    "events": rows,
-                    "bytes": 0,
-                    "secs": secs,
-                    "events_per_sec": (applied_rows / secs) if secs > 0 else 0.0,
-                    "lag_events": int(lag_events),
-                }
-                for b, rows in sorted(bucket_rows.items())
-            ],
-        )
-        snap["deltas"].append(
-            {"dir": data_dir, "schema_id": snap["current_schema_id"], "epoch": epoch}
-        )
-        snap["epoch"] = epoch
-        if hi is not None:
-            snap["seq_hi"] = max(int(snap.get("seq_hi", -1) or -1), int(hi))
-        snap["version"] += 1
-        if pre_commit is not None:
-            pre_commit()
-        self._commit_snapshot(snap, pointer=_STAGING if stage else _CURRENT)
-        return {
-            "skipped": False,
-            "epoch": epoch,
-            "rows_applied": applied_rows,
-            "buckets_touched": len(bucket_rows),
-            "secs": secs,
-        }
 
     def _written_bucket_counts(self, out_path: str) -> dict[int, int]:
         """Per-bucket row counts of a just-written bucket-partitioned dir,
@@ -1282,31 +1266,17 @@ class HashMergeTable:
         """Maintenance compaction (mor mode): fold all deltas into the base
         and clear them. Runs off the hot ingest path (every N epochs); the
         analogue of Iceberg's rewrite_data_files."""
-        self._check_staging_clear(-1, False)
         t0 = time.monotonic()
-        snap = self._snapshot()
+        snap = self._begin_commit()
         if snap.get("mode", "cow") != "mor" or not snap.get("deltas"):
             return {"skipped": True}
-        n_buckets = snap["n_buckets"]
         merged = self.read(at_snapshot=snap).withColumn(
-            "_b", bucket_expr(n_buckets, snap["key_cols"])
+            "_b", bucket_expr(snap["n_buckets"], snap["key_cols"])
         )
-        data_dir = f"data/c{snap['version']:010d}"
-        self._write_bucketed(snap, merged, n_buckets, os.path.join(self.path, data_dir))
-        bucket_rows = self._written_bucket_counts(os.path.join(self.path, data_dir))
-        snap["buckets"] = {
-            str(b): {
-                "dir": f"{data_dir}/_b={b}",
-                "schema_id": snap["current_schema_id"],
-                "rows": rows,
-            }
-            for b, rows in bucket_rows.items()
-            if rows > 0
-        }
+        rows = self._rewrite(snap, merged, f"data/c{snap['version']:010d}")
         snap["deltas"] = []
-        snap["version"] += 1
-        self._commit_snapshot(snap)
-        return {"skipped": False, "secs": time.monotonic() - t0, "rows": sum(bucket_rows.values())}
+        self._commit(snap)
+        return {"skipped": False, "secs": time.monotonic() - t0, "rows": sum(rows.values())}
 
     def rebucket(self, new_n_buckets: int) -> dict[str, Any]:
         """Partition-spec evolution: rewrite the live rows into a NEW
@@ -1320,38 +1290,23 @@ class HashMergeTable:
         rewrite. The changelog across a rebucket is EMPTY — the bucket
         diff flags everything (superset) but finds no logical change.
         """
-        self._check_staging_clear(-1, False)
+        snap = self._begin_commit()
         if int(new_n_buckets) < 1:
             raise ValueError(f"rebucket: n_buckets must be >= 1, got {new_n_buckets}")
         t0 = time.monotonic()
-        snap = self._snapshot()
         if int(new_n_buckets) == int(snap["n_buckets"]):
             return {"skipped": True, "n_buckets": int(snap["n_buckets"])}
         merged = self.read(at_snapshot=snap).withColumn(
             "_b", bucket_expr(new_n_buckets, snap["key_cols"])
         )
-        data_dir = f"data/r{snap['version']:010d}"
-        self._write_bucketed(
-            snap, merged, int(new_n_buckets), os.path.join(self.path, data_dir)
-        )
-        bucket_rows = self._written_bucket_counts(os.path.join(self.path, data_dir))
-        snap["buckets"] = {
-            str(b): {
-                "dir": f"{data_dir}/_b={b}",
-                "schema_id": snap["current_schema_id"],
-                "rows": rows,
-            }
-            for b, rows in bucket_rows.items()
-            if rows > 0
-        }
-        snap["deltas"] = []
         snap["n_buckets"] = int(new_n_buckets)
-        snap["version"] += 1
-        self._commit_snapshot(snap)
+        rows = self._rewrite(snap, merged, f"data/r{snap['version']:010d}")
+        snap["deltas"] = []
+        self._commit(snap)
         return {
             "skipped": False,
             "n_buckets": int(new_n_buckets),
-            "rows": sum(bucket_rows.values()),
+            "rows": sum(rows.values()),
             "secs": time.monotonic() - t0,
         }
 
@@ -1406,42 +1361,25 @@ class HashMergeTable:
             out = out.unionByName(p, allowMissingColumns=True)
         return out
 
-    def _commit_noop(self, snap, epoch, lo, hi, t0, pre_commit=None, stage: bool = False) -> dict[str, Any]:
-        self._append_manifest(
-            epoch,
-            [
-                {
-                    "partition": -1,
-                    "epoch": epoch,
-                    "committed_ts": time.time(),
-                    "rows_applied": 0,
-                    "src_seq_lo": lo,
-                    "src_seq_hi": hi,
-                }
-            ],
-        )
-        snap["epoch"] = epoch
-        if hi is not None:
-            snap["seq_hi"] = max(int(snap.get("seq_hi", -1) or -1), int(hi))
-        snap["version"] += 1
-        if pre_commit is not None:
-            pre_commit()
-        self._commit_snapshot(snap, pointer=_STAGING if stage else _CURRENT)
-        return {"skipped": False, "epoch": epoch, "rows_applied": 0, "buckets_touched": 0,
-                "secs": time.monotonic() - t0}
-
     # -- maintenance ------------------------------------------------------------
 
+    def _snapshot_files(self) -> list[tuple[int, str]]:
+        """``(version, file name)`` of every snapshot file, oldest first,
+        committed or not."""
+        return sorted(
+            (int(n[5:-5]), n) for n in os.listdir(os.path.join(self.path, "snapshots"))
+            if n.startswith("snap-") and n.endswith(".json")
+        )
+
     def snapshots(self) -> list[dict[str, Any]]:
-        """All retained snapshots, oldest first (time travel: pass one to
-        ``read(at_snapshot=...)``)."""
-        sdir = os.path.join(self.path, "snapshots")
-        out = []
-        for name in sorted(os.listdir(sdir)):
-            if name.startswith("snap-") and name.endswith(".json"):
-                with open(os.path.join(sdir, name)) as f:
-                    out.append(json.load(f))
-        return out
+        """All retained committed snapshots, oldest first (time travel:
+        pass one to ``read(at_snapshot=...)``). A snapshot file whose
+        version is above both CURRENT and STAGING comes from a commit
+        interrupted before its pointer swing: it is not committed and not
+        listed."""
+        named = [self._pointer(p) for p in (_CURRENT, _STAGING)]
+        top = max((int(n[5:-5]) for n in named if n), default=-1)
+        return [self._load(n) for v, n in self._snapshot_files() if v <= top]
 
     def snapshot_at_epoch(self, epoch: int) -> dict[str, Any]:
         """The table state as of ``epoch``: the latest retained snapshot
@@ -1466,14 +1404,6 @@ class HashMergeTable:
         with open(p) as f:
             return {k: int(v) for k, v in json.load(f).items()}
 
-    def _write_tags(self, tags: dict[str, int]) -> None:
-        tmp = os.path.join(self.path, f".TAGS.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(tags, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self.path, "TAGS"))
-
     def set_tag(self, name: str, version: int | None = None) -> dict[str, Any]:
         """Pin a snapshot under a name (default: the current one) —
         audit/reproducibility handles ("the corpus train-v3 was built
@@ -1486,7 +1416,7 @@ class HashMergeTable:
             raise ValueError(f"no retained snapshot with version {v}")
         tags = self.tags()
         tags[str(name)] = v
-        self._write_tags(tags)
+        atomic_write(os.path.join(self.path, "TAGS"), json.dumps(tags))
         return {"tags": tags}
 
     def drop_tag(self, name: str) -> dict[str, Any]:
@@ -1494,7 +1424,7 @@ class HashMergeTable:
         if name not in tags:
             raise KeyError(f"no tag named {name!r}")
         del tags[name]
-        self._write_tags(tags)
+        atomic_write(os.path.join(self.path, "TAGS"), json.dumps(tags))
         return {"tags": tags}
 
     def snapshot_by_tag(self, name: str) -> dict[str, Any]:
@@ -1529,6 +1459,10 @@ class HashMergeTable:
             s for s in snaps
             if int(s["version"]) in pinned and int(s["version"]) not in kept_versions
         ]
+        # a snapshot file above the pointers may be a commit in flight (its
+        # writer swings the pointer next): keep it and the data it names
+        top = int(snaps[-1]["version"])
+        keep += [self._load(n) for v, n in self._snapshot_files() if v > top]
         referenced: set[str] = set()
         for s in keep:
             for e in s["buckets"].values():
@@ -1548,13 +1482,10 @@ class HashMergeTable:
                     removed_dirs += 1
         keep_versions = {s["version"] for s in keep}
         removed_snaps = 0
-        sdir = os.path.join(self.path, "snapshots")
-        for name in os.listdir(sdir):
-            if name.startswith("snap-") and name.endswith(".json"):
-                v = int(name[5:-5])
-                if v not in keep_versions:
-                    os.remove(os.path.join(sdir, name))
-                    removed_snaps += 1
+        for v, name in self._snapshot_files():
+            if v not in keep_versions:
+                os.remove(os.path.join(self.path, "snapshots", name))
+                removed_snaps += 1
         return {"removed_data_dirs": removed_dirs, "removed_snapshots": removed_snaps}
 
     # -- write-audit-publish staging ----------------------------------------------
@@ -1577,8 +1508,7 @@ class HashMergeTable:
         (the follow feed) can tell "same epoch, rows changed" from "same
         epoch, layout changed".
         """
-        self._check_staging_clear(-1, False)
-        snap = self._snapshot()
+        snap = self._begin_commit()
         if snap.get("deltas"):
             self.compact_table()
             snap = self._snapshot()
@@ -1597,27 +1527,13 @@ class HashMergeTable:
             self.read(buckets=affected, at_snapshot=snap).where(~hit)
             .withColumn("_b", bucket_expr(n_buckets, key_cols))
         )
-        data_dir = f"data/dl{snap['version']:010d}"
-        self._write_bucketed(snap, kept, len(affected),
-                             os.path.join(self.path, data_dir))
-        bucket_rows = self._written_bucket_counts(os.path.join(self.path, data_dir))
         old_rows = sum(
             int(e["rows"]) for b, e in snap["buckets"].items() if int(b) in set(affected)
         )
-        for b in affected:
-            rows = bucket_rows.get(int(b), 0)
-            if rows > 0:
-                snap["buckets"][str(b)] = {
-                    "dir": f"{data_dir}/_b={b}",
-                    "schema_id": snap["current_schema_id"],
-                    "rows": rows,
-                }
-            else:
-                snap["buckets"].pop(str(b), None)
-        deleted = old_rows - sum(bucket_rows.values())
+        rows = self._rewrite(snap, kept, f"data/dl{snap['version']:010d}", affected)
+        deleted = old_rows - sum(rows.values())
         snap["content_rev"] = int(snap.get("content_rev", 0)) + 1
-        snap["version"] += 1
-        self._commit_snapshot(snap)
+        self._commit(snap)
         return {
             "deleted": int(deleted),
             "buckets_rewritten": len(affected),
@@ -1664,10 +1580,7 @@ class HashMergeTable:
         for kind in ("manifest", "metrics"):
             d = os.path.join(self.path, kind)
             if os.path.isdir(d):
-                loose += sum(
-                    1 for n in os.listdir(d)
-                    if n.startswith("e") and n.endswith(".parquet")
-                )
+                loose += sum(1 for n in os.listdir(d) if _side_epoch(n) is not None)
         if loose > max_loose_sidecars:
             out["sidecars"] = self.compact_sidecars()
         else:
@@ -1693,13 +1606,9 @@ class HashMergeTable:
         # neither blocks this commit nor tempts a discard_staged that
         # would delete the snapshot CURRENT names. Read paths
         # (staged_snapshot via show/vacuum) stay strictly read-only.
-        p = os.path.join(self.path, _STAGING)
-        if os.path.exists(p):
-            with open(p) as f:
-                name = f.read().strip()
-            with open(os.path.join(self.path, _CURRENT)) as f:
-                if f.read().strip() == name:
-                    os.remove(p)
+        staged_name = self._pointer(_STAGING)
+        if staged_name is not None and staged_name == self._pointer(_CURRENT):
+            os.remove(os.path.join(self.path, _STAGING))
         staged = self.staged_snapshot()
         if staged is None:
             return
@@ -1720,19 +1629,12 @@ class HashMergeTable:
         pinning — a nominally read-only command must not mutate table
         state another process may be acting on); the stale-pointer
         cleanup happens on the next WRITE path via _check_staging_clear."""
-        p = os.path.join(self.path, _STAGING)
-        if not os.path.exists(p):
+        name = self._pointer(_STAGING)
+        if name is None or name == self._pointer(_CURRENT):
             return None
-        with open(p) as f:
-            name = f.read().strip()
-        with open(os.path.join(self.path, _CURRENT)) as f:
-            if f.read().strip() == name:
-                return None
-        sp = os.path.join(self.path, "snapshots", name)
-        if not os.path.exists(sp):
+        if not os.path.exists(os.path.join(self.path, "snapshots", name)):
             return None
-        with open(sp) as f:
-            return json.load(f)
+        return self._load(name)
 
     def publish_staged(self) -> dict[str, Any]:
         """Atomically make the staged snapshot the table's CURRENT state —
@@ -1744,12 +1646,7 @@ class HashMergeTable:
         if staged is None:
             raise ValueError("no staged snapshot to publish")
         name = f"snap-{staged['version']:08d}.json"
-        cur_tmp = os.path.join(self.path, f".{_CURRENT}.{uuid.uuid4().hex}.tmp")
-        with open(cur_tmp, "w") as f:
-            f.write(name)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(cur_tmp, os.path.join(self.path, _CURRENT))
+        atomic_write(os.path.join(self.path, _CURRENT), name)
         os.remove(os.path.join(self.path, _STAGING))
         return {"published": True, "epoch": int(staged["epoch"]),
                 "version": int(staged["version"])}
@@ -1776,35 +1673,17 @@ class HashMergeTable:
 
     def _side_table_through(self, snap: dict, kind: str, through_epoch: int):
         """Driver-side (pyarrow) read of a side table's committed rows with
-        ``epoch <= through_epoch`` — segments named by ``snap`` plus
-        per-epoch files above its consolidation watermark, exactly the set
-        :meth:`_read_side` scans. Side tables are O(epochs × buckets) rows;
-        no Spark job. Returns a pyarrow Table or None."""
+        ``epoch <= through_epoch`` — the files :meth:`_side_files` resolves
+        for ``snap``. Side tables are O(epochs × buckets) rows; no Spark
+        job. Returns a pyarrow Table or None."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        d = os.path.join(self.path, kind)
-        if not os.path.isdir(d):
+        paths = self._side_files(snap, kind)
+        if not paths:
             return None
-        wm = int(snap.get(f"{kind}_compacted_through", -1))
-        paths = [os.path.join(d, n) for n in self._side_segments(snap, kind)]
-        missing = [p for p in paths if not os.path.exists(p)]
-        if missing:
-            raise FileNotFoundError(
-                f"{kind} segment(s) named in committed snapshot are missing "
-                f"on disk: {missing} — side table at {d} is corrupt"
-            )
-        paths += [
-            os.path.join(d, n)
-            for n in sorted(os.listdir(d))
-            if n.startswith("e") and n.endswith(".parquet")
-            and n[1:-8].isdigit() and int(n[1:-8]) > wm
-        ]
-        tables = [pq.read_table(p) for p in paths]
-        if not tables:
-            return None
-        t = pa.concat_tables(tables)
+        t = pa.concat_tables([pq.read_table(p) for p in paths])
         t = t.filter(pc.less_equal(t.column("epoch"), pa.scalar(through_epoch, type=pa.int64())))
         return t if t.num_rows else None
 
@@ -1844,8 +1723,6 @@ class HashMergeTable:
           (orphans if we crash — never read, swept later), then the
           one-file snapshot commit, then cleanup (re-runnable).
         """
-        import pyarrow.parquet as pq
-
         if sum(x is not None for x in (version, epoch, tag)) != 1:
             raise ValueError("rollback needs exactly one of version=, epoch=, tag=")
         if self.staged_snapshot() is not None:
@@ -1877,7 +1754,7 @@ class HashMergeTable:
 
         target_epoch = int(target["epoch"])
         new = json.loads(json.dumps(target))  # deep copy of the target state
-        new["version"] = int(cur["version"]) + 1
+        new["version"] = int(cur["version"])  # _commit bumps it
         new["rollback_of"] = int(target["version"])
         new["rolled_back_from"] = int(cur["version"])
         # timeline marker: every rollback starts a new lineage; all later
@@ -1895,35 +1772,26 @@ class HashMergeTable:
                 new[f"{kind}_segments"] = []
             else:
                 seg = f"seg-{uuid.uuid4().hex}.parquet"
-                d = os.path.join(self.path, kind)
-                tmp = os.path.join(d, f".{seg}.tmp")
-                pq.write_table(t, tmp)
-                os.replace(tmp, os.path.join(d, seg))
+                atomic_write(os.path.join(self.path, kind, seg), _parquet_bytes(t))
                 new[f"{kind}_segments"] = [seg]
             new[f"{kind}_compacted_through"] = target_epoch
 
-        self._commit_snapshot(new)
+        self._commit(new)
 
         # cleanup (all re-runnable; a crash anywhere here is benign):
         # retire superseded snapshot files, drop the abandoned timeline's
         # per-epoch side files, sweep segments nothing references
-        sdir = os.path.join(self.path, "snapshots")
         retired = 0
-        for name in os.listdir(sdir):
-            if name.startswith("snap-") and name.endswith(".json"):
-                v = int(name[5:-5])
-                if int(target["version"]) < v < int(new["version"]):
-                    os.remove(os.path.join(sdir, name))
-                    retired += 1
+        for v, name in self._snapshot_files():
+            if int(target["version"]) < v < int(new["version"]):
+                os.remove(os.path.join(self.path, "snapshots", name))
+                retired += 1
         for kind in ("manifest", "metrics"):
             d = os.path.join(self.path, kind)
             if not os.path.isdir(d):
                 continue
             for n in os.listdir(d):
-                if (
-                    n.startswith("e") and n.endswith(".parquet")
-                    and n[1:-8].isdigit() and int(n[1:-8]) > target_epoch
-                ):
+                if (e := _side_epoch(n)) is not None and e > target_epoch:
                     os.remove(os.path.join(d, n))
         self._clean_side_orphans(new)
         return {
@@ -1950,52 +1818,26 @@ class HashMergeTable:
         ]
     )
 
-    def _append_side_rows(self, kind: str, epoch: int, rows: list[dict], pa_schema) -> None:
+    _SIDE_RAW = {"manifest": _MANIFEST_RAW, "metrics": METRICS_SCHEMA}
+
+    def _append_side_rows(self, kind: str, epoch: int, rows: list[dict]) -> None:
         """Atomically write one epoch's manifest/metrics rows as a parquet
         file under ``{table}/{kind}/e{epoch}.parquet`` — pyarrow, driver-side,
         O(n_buckets) rows, no Spark job on the hot path. Deterministic name
-        + os.replace ⇒ a retried epoch overwrites its own orphan."""
+        + atomic replace ⇒ a retried epoch overwrites its own orphan. The
+        file's columns are the raw schema's, every field nullable."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
+        arrow = {"integer": "int32", "long": "int64", "double": "float64"}
+        schema = pa.schema([
+            pa.field(f.name, pa.type_for_alias(arrow[f.dataType.typeName()]))
+            for f in self._SIDE_RAW[kind].fields
+        ])
         d = os.path.join(self.path, kind)
         os.makedirs(d, exist_ok=True)
-        cols = {name: [r[name] for r in rows] for name in pa_schema.names}
-        tbl = pa.Table.from_pydict(cols, schema=pa_schema)
-        tmp = os.path.join(d, f".e{epoch:010d}.{uuid.uuid4().hex}.tmp")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(d, f"e{epoch:010d}.parquet"))
-
-    def _append_manifest(self, epoch: int, rows: list[dict]) -> None:
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [
-                ("partition", pa.int32()),
-                ("epoch", pa.int64()),
-                ("committed_ts", pa.float64()),
-                ("rows_applied", pa.int64()),
-                ("src_seq_lo", pa.int64()),
-                ("src_seq_hi", pa.int64()),
-            ]
-        )
-        self._append_side_rows("manifest", epoch, rows, schema)
-
-    def _append_metrics(self, epoch: int, rows: list[dict]) -> None:
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [
-                ("epoch", pa.int64()),
-                ("partition", pa.int32()),
-                ("events", pa.int64()),
-                ("bytes", pa.int64()),
-                ("secs", pa.float64()),
-                ("events_per_sec", pa.float64()),
-                ("lag_events", pa.int64()),
-            ]
-        )
-        self._append_side_rows("metrics", epoch, rows, schema)
+        cols = {name: [r[name] for r in rows] for name in schema.names}
+        tbl = pa.Table.from_pydict(cols, schema=schema)
+        atomic_write(os.path.join(d, f"e{epoch:010d}.parquet"), _parquet_bytes(tbl))
 
     def _side_segments(self, snap: dict, kind: str) -> list[str]:
         """Names of the committed consolidated segment files for a side
@@ -2008,21 +1850,18 @@ class HashMergeTable:
             return ["all.parquet"]
         return []
 
-    def _read_side(self, kind: str, raw_schema: T.StructType) -> DataFrame | None:
-        """Side-table scan = committed consolidated segments + per-epoch
-        files newer than the consolidation watermark. Only segment files
-        the SNAPSHOT references are read, so an orphan segment from a
-        crashed :meth:`compact_sidecars` is invisible; stale per-epoch
-        files below the watermark are excluded by the watermark. No crash
-        window can make a row appear twice."""
-        snap = self._snapshot()
+    def _side_files(self, snap: dict, kind: str) -> list[str]:
+        """A side table's files under ``snap``: the consolidated segments
+        it names plus the per-epoch files newer than its consolidation
+        watermark. Only segment files the SNAPSHOT references are read, so
+        an orphan segment from a crashed :meth:`compact_sidecars` is
+        invisible; stale per-epoch files below the watermark are excluded
+        by the watermark. No crash window can make a row appear twice."""
         d = os.path.join(self.path, kind)
         if not os.path.isdir(d):
-            return None
-        through = int(snap.get(f"{kind}_compacted_through", -1))
-        parts = []
-        seg_paths = [os.path.join(d, n) for n in self._side_segments(snap, kind)]
-        missing = [p for p in seg_paths if not os.path.exists(p)]
+            return []
+        segs = [os.path.join(d, n) for n in self._side_segments(snap, kind)]
+        missing = [p for p in segs if not os.path.exists(p)]
         if missing:
             # a segment the COMMITTED snapshot references is gone — that is
             # exactly the corruption the segment-list commit protocol
@@ -2032,19 +1871,20 @@ class HashMergeTable:
                 f"{kind} segment(s) named in committed snapshot are missing "
                 f"on disk: {missing} — side table at {d} is corrupt"
             )
-        if seg_paths:
-            parts.append(self.spark.read.schema(raw_schema).parquet(*seg_paths))
-        epoch_files = [
-            os.path.join(d, n)
-            for n in os.listdir(d)
-            if n.startswith("e") and n.endswith(".parquet")
-            and int(n[1:-8]) > through
+        wm = int(snap.get(f"{kind}_compacted_through", -1))
+        return segs + [
+            os.path.join(d, n) for n in sorted(os.listdir(d))
+            if (e := _side_epoch(n)) is not None and e > wm
         ]
-        if epoch_files:
-            parts.append(self.spark.read.schema(raw_schema).parquet(*epoch_files))
-        if not parts:
+
+    def _read_side(self, kind: str) -> DataFrame | None:
+        """Spark scan of a side table's :meth:`_side_files` under the
+        current snapshot."""
+        snap = self._snapshot()
+        paths = self._side_files(snap, kind)
+        if not paths:
             return None
-        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        df = self.spark.read.schema(self._SIDE_RAW[kind]).parquet(*paths)
         # anchor to the committed snapshot: orphan files from a crashed
         # commit carry epoch > snapshot.epoch and are filtered out
         return df.where(F.col("epoch") <= F.lit(snap["epoch"]))
@@ -2064,7 +1904,7 @@ class HashMergeTable:
             for n in os.listdir(d):
                 if not n.endswith(".parquet"):
                     continue
-                stale_epoch = n.startswith("e") and n[1:-8].isdigit() and int(n[1:-8]) <= through
+                stale_epoch = (e := _side_epoch(n)) is not None and e <= through
                 orphan_seg = (n.startswith("seg-") or n == "all.parquet") and n not in referenced
                 if stale_epoch or orphan_seg:
                     os.remove(os.path.join(d, n))
@@ -2089,12 +1929,11 @@ class HashMergeTable:
         next invocation's cleanup); a crash after it leaves stale
         per-epoch/segment files the watermark and segment list already
         exclude. Readers can never see a folded row twice."""
-        self._check_staging_clear(-1, False)
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         t0 = time.monotonic()
-        snap = self._snapshot()
+        snap = self._begin_commit()
         # cleanup from any previously crashed invocation, against the
         # committed snapshot — safe because only unreferenced files go
         self._clean_side_orphans(snap)
@@ -2106,8 +1945,7 @@ class HashMergeTable:
             through = int(snap.get(f"{kind}_compacted_through", -1))
             epoch_files = sorted(
                 n for n in os.listdir(d)
-                if n.startswith("e") and n.endswith(".parquet")
-                and through < int(n[1:-8]) <= snap["epoch"]
+                if (e := _side_epoch(n)) is not None and through < e <= snap["epoch"]
             )
             segments = self._side_segments(snap, kind)
             if not epoch_files:
@@ -2120,21 +1958,18 @@ class HashMergeTable:
                 ] + new_tables
                 segments = []
             seg_name = f"seg-{snap['version'] + 1:08d}-{uuid.uuid4().hex[:8]}.parquet"
-            tmp = os.path.join(d, f".{seg_name}.tmp")
-            pq.write_table(pa.concat_tables(new_tables), tmp)
-            os.replace(tmp, os.path.join(d, seg_name))
+            atomic_write(os.path.join(d, seg_name), _parquet_bytes(pa.concat_tables(new_tables)))
             snap[f"{kind}_segments"] = segments + [seg_name]
             snap[f"{kind}_compacted_through"] = int(snap["epoch"])
             folded[kind] = len(epoch_files)
         if not folded:
             return {"skipped": True}
-        snap["version"] += 1
-        self._commit_snapshot(snap)
+        self._commit(snap)
         self._clean_side_orphans(snap)
         return {"skipped": False, "folded": folded, "secs": time.monotonic() - t0}
 
     def manifest(self) -> DataFrame:
-        raw = self._read_side("manifest", self._MANIFEST_RAW)
+        raw = self._read_side("manifest")
         if raw is None:
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
         return raw.select(
@@ -2147,7 +1982,7 @@ class HashMergeTable:
         )
 
     def metrics(self) -> DataFrame:
-        raw = self._read_side("metrics", METRICS_SCHEMA)
+        raw = self._read_side("metrics")
         if raw is None:
             return self.spark.createDataFrame([], METRICS_SCHEMA)
         return raw

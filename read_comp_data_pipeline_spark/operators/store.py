@@ -23,6 +23,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from read_comp_data_pipeline_spark.operators.merge import atomic_write
+
 _META = "_store_meta.json"
 
 
@@ -51,8 +53,10 @@ class StoreKind:
 
     def write_meta(self, path: str, **params) -> None:
         os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, _META), "w") as f:
-            json.dump({"kind": self.name, "buckets": self.buckets, **params}, f)
+        atomic_write(
+            os.path.join(path, _META),
+            json.dumps({"kind": self.name, "buckets": self.buckets, **params}),
+        )
 
     def params(self, path: str) -> dict:
         """The build parameters recorded by the store at ``path``. Raises

@@ -28,7 +28,7 @@ from read_comp_data_pipeline_spark.functions.extract import (
     title_expr,
 )
 from read_comp_data_pipeline_spark.operators.compact import compact_latest
-from read_comp_data_pipeline_spark.operators.merge import HashMergeTable
+from read_comp_data_pipeline_spark.operators.merge import HashMergeTable, atomic_write
 from read_comp_data_pipeline_spark.schemas import TARGET_SCHEMA
 from read_comp_data_pipeline_spark.session import PerJVM, observed_or
 from read_comp_data_pipeline_spark.sources import wal as wal_src
@@ -557,17 +557,14 @@ def _record_audit_rejection(table_path: str, epoch: int, reason: str) -> None:
     ``show`` CLI surfaces the count). Deterministic name: a re-rejected
     epoch overwrites its own record; an epoch that later passes keeps the
     record as history of the rejection event."""
-    import json as _json
-    import os
-    import time as _time
-    import uuid as _uuid
+    import json
 
     d = os.path.join(table_path, "audits")
     os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".e{epoch:010d}.{_uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        _json.dump({"epoch": epoch, "reason": reason, "rejected_ts": _time.time()}, f)
-    os.replace(tmp, os.path.join(d, f"e{epoch:010d}.json"))
+    atomic_write(
+        os.path.join(d, f"e{epoch:010d}.json"),
+        json.dumps({"epoch": epoch, "reason": reason, "rejected_ts": time.time()}),
+    )
 
 
 def _snapshot_row_count(table, snap) -> int:

@@ -13,7 +13,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -75,9 +74,9 @@ def _edge_set(df):
     }
 
 
-def test_incremental_equals_batch_on_union(spark):
+def test_incremental_equals_batch_on_union(spark, tmp_path):
     corpus, delta = _corpus_and_delta(spark)
-    store = tempfile.mkdtemp(prefix="sigstore_")
+    store = str(tmp_path)
     build_signature_store(corpus, store, **PARAMS)
     inc = _edge_set(incremental_near_dups(delta, store))
     batch = _edge_set(minhash_near_dups(corpus.unionByName(delta), **PARAMS))
@@ -90,11 +89,11 @@ def test_incremental_equals_batch_on_union(spark):
     assert not any(100 in (a, b) and j < 1.0 for a, b, j in inc if a != 50)
 
 
-def test_incremental_noop_delta_returns_store_edges(spark):
+def test_incremental_noop_delta_returns_store_edges(spark, tmp_path):
     """An empty delta must reproduce exactly the stored state (= batch on
     the corpus alone): no spurious edges, no lost edges."""
     corpus, _ = _corpus_and_delta(spark)
-    store = tempfile.mkdtemp(prefix="sigstore_")
+    store = str(tmp_path)
     build_signature_store(corpus, store, **PARAMS)
     empty = corpus.where(F.lit(False))
     inc = _edge_set(incremental_near_dups(empty, store))
@@ -102,12 +101,12 @@ def test_incremental_noop_delta_returns_store_edges(spark):
     assert inc == batch
 
 
-def test_incremental_plan_never_scans_corpus_text(spark):
+def test_incremental_plan_never_scans_corpus_text(spark, tmp_path):
     """The delta plan's file scans touch only the signature store and the
     delta parquet — the corpus documents file never appears (work ∝ delta,
     the 100 TB per-epoch contract)."""
     corpus, delta = _corpus_and_delta(spark)
-    root = tempfile.mkdtemp(prefix="incdedup_")
+    root = str(tmp_path)
     corpus_path = os.path.join(root, "corpus_docs_DO_NOT_SCAN")
     delta_path = os.path.join(root, "delta_docs")
     store = os.path.join(root, "store")
@@ -134,7 +133,7 @@ def test_incremental_plan_never_scans_corpus_text(spark):
     )
 
 
-def test_store_update_chains_epochs(spark):
+def test_store_update_chains_epochs(spark, tmp_path):
     """update_signature_store makes the incremental path CHAINABLE: store0
     (corpus) + delta1 → store1; incremental(delta2, store1) must equal
     batch on the 3-way union — including a second-epoch takeover of a
@@ -152,7 +151,7 @@ def test_store_update_chains_epochs(spark):
         ],
         "doc_id long, text string",
     )
-    root = tempfile.mkdtemp(prefix="chain_")
+    root = str(tmp_path)
     s0, s1 = os.path.join(root, "s0"), os.path.join(root, "s1")
     build_signature_store(corpus, s0, **PARAMS)
     update_signature_store(delta1, s0, s1)
@@ -165,13 +164,13 @@ def test_store_update_chains_epochs(spark):
     assert {(7, 50, 1.0), (7, 100, 1.0), (7, 101, 1.0), (7, 200, 1.0)} <= inc
 
 
-def test_updated_store_equals_rebuilt_store(spark):
+def test_updated_store_equals_rebuilt_store(spark, tmp_path):
     """store0 + delta folded in == store built from scratch on the union,
     relation by relation (the invariant that lets epochs chain forever)."""
     from read_comp_data_pipeline_spark.operators.dedup import update_signature_store
 
     corpus, delta = _corpus_and_delta(spark)
-    root = tempfile.mkdtemp(prefix="storeeq_")
+    root = str(tmp_path)
     s0, s1, sref = (os.path.join(root, x) for x in ("s0", "s1", "sref"))
     build_signature_store(corpus, s0, **PARAMS)
     update_signature_store(delta, s0, s1)
@@ -182,7 +181,7 @@ def test_updated_store_equals_rebuilt_store(spark):
         assert got == exp, f"relation {rel} diverged"
 
 
-def test_incremental_prunes_store_partitions_on_disk(spark):
+def test_incremental_prunes_store_partitions_on_disk(spark, tmp_path):
     """The store's bands/shingles relations are PARTITIONED (bk = band-hash
     bucket, sk = id bucket) and the delta's candidate work pushes static
     partition filters — only the buckets the delta touches are read from
@@ -201,7 +200,7 @@ def test_incremental_prunes_store_partitions_on_disk(spark):
         [(10, _words("c100x")), (11, _words("freshone"))],
         "doc_id long, text string",
     )
-    store = tempfile.mkdtemp(prefix="prunestore_")
+    store = str(tmp_path)
     build_signature_store(corpus, store, **PARAMS)
     st = _incremental_state(delta, store, "text", "doc_id")
 

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import os
 import random
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -73,9 +72,9 @@ def _edge_set(df):
     return {(r["id_a"], r["id_b"], round(r["cosine"], 6)) for r in df.collect()}
 
 
-def test_emb_incremental_equals_batch_on_union(spark):
+def test_emb_incremental_equals_batch_on_union(spark, tmp_path):
     corpus, delta = _corpus_and_delta(spark)
-    store = tempfile.mkdtemp(prefix="embstore_")
+    store = str(tmp_path)
     build_embedding_store(corpus, store, **PARAMS)
     inc = _edge_set(incremental_embedding_near_dups(delta, store))
     batch = _edge_set(embedding_near_dup_lsh(corpus.unionByName(delta), **PARAMS))
@@ -86,9 +85,9 @@ def test_emb_incremental_equals_batch_on_union(spark):
     assert (202, 203, 1.0) in inc
 
 
-def test_emb_incremental_empty_delta_returns_store_edges(spark):
+def test_emb_incremental_empty_delta_returns_store_edges(spark, tmp_path):
     corpus, _ = _corpus_and_delta(spark)
-    store = tempfile.mkdtemp(prefix="embstore_")
+    store = str(tmp_path)
     build_embedding_store(corpus, store, **PARAMS)
     empty = corpus.where(F.lit(False))
     inc = _edge_set(incremental_embedding_near_dups(empty, store))
@@ -96,7 +95,7 @@ def test_emb_incremental_empty_delta_returns_store_edges(spark):
     assert inc == batch
 
 
-def test_emb_store_update_chains_epochs(spark):
+def test_emb_store_update_chains_epochs(spark, tmp_path):
     """store0 + delta1 folded → store1; incremental(delta2, store1) equals
     batch on the 3-way union, including a second-epoch takeover."""
     corpus, delta1 = _corpus_and_delta(spark)
@@ -110,7 +109,7 @@ def test_emb_store_update_chains_epochs(spark):
         ],
         SCHEMA,
     )
-    root = tempfile.mkdtemp(prefix="embchain_")
+    root = str(tmp_path)
     s0, s1 = os.path.join(root, "s0"), os.path.join(root, "s1")
     build_embedding_store(corpus, s0, **PARAMS)
     update_embedding_store(delta1, s0, s1)
@@ -124,9 +123,9 @@ def test_emb_store_update_chains_epochs(spark):
     assert {(7, 50, 1.0), (7, 100, 1.0), (7, 101, 1.0), (7, 200, 1.0)} <= inc
 
 
-def test_emb_updated_store_equals_rebuilt_store(spark):
+def test_emb_updated_store_equals_rebuilt_store(spark, tmp_path):
     corpus, delta = _corpus_and_delta(spark)
-    root = tempfile.mkdtemp(prefix="embeq_")
+    root = str(tmp_path)
     s0, s1, sref = (os.path.join(root, x) for x in ("s0", "s1", "sref"))
     build_embedding_store(corpus, s0, **PARAMS)
     update_embedding_store(delta, s0, s1)
@@ -145,7 +144,7 @@ def test_emb_updated_store_equals_rebuilt_store(spark):
     assert reps(s1) == reps(sref)
 
 
-def test_emb_incremental_never_scans_corpus_vectors(spark):
+def test_emb_incremental_never_scans_corpus_vectors(spark, tmp_path):
     """The delta plan reads only the store and the delta parquet; the
     store's reps relation is partition-pruned to the delta's buckets."""
     from read_comp_data_pipeline_spark.operators.similarity import (
@@ -158,7 +157,7 @@ def test_emb_incremental_never_scans_corpus_vectors(spark):
     delta = spark.createDataFrame(
         [(10, _vec("c100")), (11, _vec("freshone"))], SCHEMA
     )
-    root = tempfile.mkdtemp(prefix="embprune_")
+    root = str(tmp_path)
     corpus_path = os.path.join(root, "corpus_vecs_DO_NOT_SCAN")
     store = os.path.join(root, "store")
     corpus.write.parquet(corpus_path)
@@ -195,9 +194,9 @@ def test_emb_incremental_never_scans_corpus_vectors(spark):
     assert "ek" in buf.getvalue().split("PartitionFilters")[1][:120]
 
 
-def test_emb_store_parameter_mismatch_fails_loudly(spark):
+def test_emb_store_parameter_mismatch_fails_loudly(spark, tmp_path):
     corpus, delta = _corpus_and_delta(spark)
-    store = tempfile.mkdtemp(prefix="embmeta_")
+    store = str(tmp_path)
     build_embedding_store(corpus, store, **PARAMS)
     with pytest.raises(ValueError, match="must differ"):
         update_embedding_store(delta, store, store)
@@ -225,7 +224,7 @@ def test_emb_vec_hash_keeps_null_positions_and_double_precision(spark):
     assert hashes[3] != hashes[4]
 
 
-def test_emb_incremental_emits_no_self_pairs_on_id_reuse(spark):
+def test_emb_incremental_emits_no_self_pairs_on_id_reuse(spark, tmp_path):
     """A delta row reusing a corpus vec_id with a CHANGED vector becomes a
     new rep while the store still holds a rep under the same id; if both
     land in one bucket (a scaled vector always does — hyperplane signs are
@@ -236,7 +235,7 @@ def test_emb_incremental_emits_no_self_pairs_on_id_reuse(spark):
     delta = spark.createDataFrame(
         [(100, [round(x * 1.5, 4) for x in A])], SCHEMA  # same signs, new hash
     )
-    store = tempfile.mkdtemp(prefix="embself_")
+    store = str(tmp_path)
     build_embedding_store(corpus, store, **PARAMS)
     out = incremental_embedding_near_dups(delta, store)
     assert out.where(F.col("id_a") == F.col("id_b")).count() == 0

@@ -17,7 +17,6 @@ import contextlib
 import io
 import json
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -64,12 +63,12 @@ def _corpus_and_delta(spark):
     return corpus, delta
 
 
-def test_paragraph_incremental_matches_batch_when_corpus_precedes(spark):
+def test_paragraph_incremental_matches_batch_when_corpus_precedes(spark, tmp_path):
     """Corpus ids all precede delta ids, so batch first-occurrence-wins on
     the union restricted to the delta docs IS the epoch semantics — the
     incremental path must reproduce it value-exactly."""
     corpus, delta = _corpus_and_delta(spark)
-    store = tempfile.mkdtemp(prefix="pstore_")
+    store = str(tmp_path)
     build_paragraph_store(corpus, store)
     inc = _by_id(paragraph_dedup_incremental(delta, store))
     delta_ids = {r["doc_id"] for r in delta.collect()}
@@ -93,14 +92,14 @@ def test_paragraph_incremental_matches_batch_when_corpus_precedes(spark):
     assert (inc[204]["n_paras"], inc[204]["cleaned_text"]) == (0, "")
 
 
-def test_paragraph_incremental_epoch_precedence_overrides_id_order(spark):
+def test_paragraph_incremental_epoch_precedence_overrides_id_order(spark, tmp_path):
     """A delta doc with a SMALLER id than the corpus owner still loses its
     stored paragraphs: the epoch order (corpus committed first) decides,
     not the id order — this is exactly where incremental deliberately
     diverges from batch-on-union."""
     corpus = _docs(spark, [(500, "stored line\nother stored")])
     delta = _docs(spark, [(1, "stored line\nbrand new line")])
-    store = tempfile.mkdtemp(prefix="pstore_")
+    store = str(tmp_path)
     build_paragraph_store(corpus, store)
     inc = _by_id(paragraph_dedup_incremental(delta, store))
     assert inc[1]["cleaned_text"] == "brand new line"
@@ -110,12 +109,12 @@ def test_paragraph_incremental_epoch_precedence_overrides_id_order(spark):
     assert batch[1]["n_kept"] == 2
 
 
-def test_paragraph_incremental_plan_scans_store_not_corpus(spark):
+def test_paragraph_incremental_plan_scans_store_not_corpus(spark, tmp_path):
     """The delta plan's file scans touch only the hash store and the delta
     parquet — the corpus documents file never appears — and the store scan
     carries a pb partition filter (bucket pruning on disk)."""
     corpus, delta = _corpus_and_delta(spark)
-    root = tempfile.mkdtemp(prefix="incpara_")
+    root = str(tmp_path)
     corpus_path = os.path.join(root, "corpus_docs_DO_NOT_SCAN")
     delta_path = os.path.join(root, "delta_docs")
     store = os.path.join(root, "pstore")
@@ -139,7 +138,7 @@ def test_paragraph_incremental_plan_scans_store_not_corpus(spark):
                for seg in pstore_scans)
 
 
-def test_paragraph_store_prunes_buckets_on_disk(spark):
+def test_paragraph_store_prunes_buckets_on_disk(spark, tmp_path):
     """A small delta touches few hash buckets; the membership join must
     read strictly fewer store files than exist (real partition pruning,
     asserted against files on disk via the touched-bucket filter)."""
@@ -147,7 +146,7 @@ def test_paragraph_store_prunes_buckets_on_disk(spark):
         spark, [(i, "\n".join(f"corp {i} line {j}" for j in range(4))) for i in range(60)]
     )
     delta = _docs(spark, [(1000, "corp 7 line 2\nonly new line")])
-    store = tempfile.mkdtemp(prefix="pprune_")
+    store = str(tmp_path)
     build_paragraph_store(corpus, store)
     all_files = {
         r["f"]
@@ -183,11 +182,11 @@ def test_paragraph_store_prunes_buckets_on_disk(spark):
     assert pruned_files < all_files
 
 
-def test_paragraph_store_update_equals_rebuild(spark):
+def test_paragraph_store_update_equals_rebuild(spark, tmp_path):
     """store0 + delta folded in == store rebuilt from the union — the
     invariant that lets epochs chain forever."""
     corpus, delta = _corpus_and_delta(spark)
-    root = tempfile.mkdtemp(prefix="pchain_")
+    root = str(tmp_path)
     s0, s1, sref = (os.path.join(root, x) for x in ("s0", "s1", "sref"))
     build_paragraph_store(corpus, s0)
     update_paragraph_store(delta, s0, s1)
@@ -225,9 +224,9 @@ def test_cli_para_store_delta_roundtrip(spark, tmp_path, capsys):
     )
 
 
-def test_paragraph_store_meta_guard(spark):
+def test_paragraph_store_meta_guard(spark, tmp_path):
     corpus, delta = _corpus_and_delta(spark)
-    store = tempfile.mkdtemp(prefix="pguard_")
+    store = str(tmp_path)
     build_paragraph_store(corpus, store)
     with open(os.path.join(store, "_store_meta.json"), "w") as f:
         json.dump({"buckets": 8}, f)

@@ -10,7 +10,6 @@ against it value-exactly.
 from __future__ import annotations
 
 import random
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -86,7 +85,7 @@ def _random_events(seed: int, n: int = 300, keys: int = 30):
     return evs
 
 
-def _make_table(spark, prefix: str) -> HashMergeTable:
+def _make_table(spark, path) -> HashMergeTable:
     schema = partial_schema(
         [
             T.StructField("title", T.StringType(), True),
@@ -94,7 +93,7 @@ def _make_table(spark, prefix: str) -> HashMergeTable:
         ]
     )
     return HashMergeTable.create(
-        spark, tempfile.mkdtemp(prefix=prefix), schema, n_buckets=4, mode="cow"
+        spark, str(path), schema, n_buckets=4, mode="cow"
     )
 
 
@@ -158,27 +157,27 @@ def _replay(spark, table, events, epoch_size=60, order=None):
     return table
 
 
-def test_partial_replay_matches_interpreter(spark):
+def test_partial_replay_matches_interpreter(spark, tmp_path):
     evs = _random_events(1)
-    t = _replay(spark, _make_table(spark, "pt_replay_"), evs)
+    t = _replay(spark, _make_table(spark, tmp_path / "pt_replay"), evs)
     _assert_matches(t.read(), evs)
 
 
-def test_partial_update_does_not_clobber_unset_columns(spark):
+def test_partial_update_does_not_clobber_unset_columns(spark, tmp_path):
     evs = [
         (1, "r", "p", "I", "t1", "x1"),
         (70, "r", "p", "U", None, "x70"),  # second epoch: text only
     ]
-    t = _replay(spark, _make_table(spark, "pt_noclobber_"), evs)
+    t = _replay(spark, _make_table(spark, tmp_path / "pt_noclobber"), evs)
     r = t.read().collect()[0]
     assert (r["title"], r[shadow_col("title")]) == ("t1", 1)  # survived
     assert (r["text"], r[shadow_col("text")]) == ("x70", 70)
     assert r["seq"] == 70
 
 
-def test_partial_replay_idempotent(spark):
+def test_partial_replay_idempotent(spark, tmp_path):
     evs = _random_events(2)
-    t = _replay(spark, _make_table(spark, "pt_idem_"), evs)
+    t = _replay(spark, _make_table(spark, tmp_path / "pt_idem"), evs)
     before = sorted(map(tuple, t.read().collect()))
     # re-merge every epoch: all must skip, state bit-identical
     df = spark.createDataFrame(evs, EVENT_SCHEMA)
@@ -188,7 +187,7 @@ def test_partial_replay_idempotent(spark):
     assert sorted(map(tuple, t.read().collect())) == before
 
 
-def test_epoch_permutations_commute_for_updates(spark):
+def test_epoch_permutations_commute_for_updates(spark, tmp_path):
     """Per-column argmax conflict resolution makes UPDATE application
     order-insensitive: any epoch permutation converges bit-identically
     (deletes keep the engine's monotone contract and are excluded here)."""
@@ -197,28 +196,28 @@ def test_epoch_permutations_commute_for_updates(spark):
     for perm_seed in range(3):
         order = list(range(5))
         random.Random(perm_seed).shuffle(order)
-        t = _replay(spark, _make_table(spark, f"pt_perm{perm_seed}_"), evs, order=order)
+        t = _replay(spark, _make_table(spark, tmp_path / f"pt_perm{perm_seed}"), evs, order=order)
         states.append(sorted(map(tuple, t.read().collect())))
     assert states[0] == states[1] == states[2]
     _assert_matches_rows = _truth(evs)
     assert len(states[0]) == len(_assert_matches_rows)
 
 
-def test_delete_then_sparse_reinsert_across_epochs(spark):
+def test_delete_then_sparse_reinsert_across_epochs(spark, tmp_path):
     evs = [
         (1, "r", "p", "I", "t1", "x1"),
         (65, "r", "p", "D", None, None),   # epoch 1: delete
         (130, "r", "p", "U", None, "x130"),  # epoch 2: sparse re-insert
     ]
-    t = _replay(spark, _make_table(spark, "pt_del_"), evs)
+    t = _replay(spark, _make_table(spark, tmp_path / "pt_del"), evs)
     r = t.read().collect()[0]
     assert r["title"] is None  # pre-delete value did not resurrect
     assert (r["text"], r["seq"]) == ("x130", 130)
 
 
-def test_final_delete_removes_row(spark):
+def test_final_delete_removes_row(spark, tmp_path):
     evs = [(1, "r", "p", "I", "t1", "x1"), (65, "r", "p", "D", None, None)]
-    t = _replay(spark, _make_table(spark, "pt_gone_"), evs)
+    t = _replay(spark, _make_table(spark, tmp_path / "pt_gone"), evs)
     assert t.read().count() == 0
 
 
@@ -249,10 +248,10 @@ def test_apply_partial_target_never_shuffles(spark):
     assert phys.count("BroadcastHashJoin") >= 2, phys
 
 
-def test_merge_partial_requires_cow(spark):
+def test_merge_partial_requires_cow(spark, tmp_path):
     schema = partial_schema([T.StructField("title", T.StringType(), True)])
     t = HashMergeTable.create(
-        spark, tempfile.mkdtemp(prefix="pt_mor_"), schema, n_buckets=2, mode="mor"
+        spark, str(tmp_path), schema, n_buckets=2, mode="mor"
     )
     with pytest.raises(NotImplementedError):
         t.merge_partial(
@@ -305,19 +304,19 @@ def test_stream_partial_matches_batch_and_survives_checkpoint_loss(spark, tmp_pa
     stream_ingest_partial(spark, wal, tbl_s, cp, VALUE_COLS, event_schema, n_buckets=4)
 
     got = sorted(map(tuple, HashMergeTable(spark, tbl_s).read().collect()))
-    batch_t = _replay(spark, _make_table(spark, "pt_sb_"), evs, epoch_size=50)
+    batch_t = _replay(spark, _make_table(spark, tmp_path / "pt_sb"), evs, epoch_size=50)
     want = sorted(map(tuple, batch_t.read().collect()))
     assert got == want
     _assert_matches(batch_t.read(), evs)
 
 
-def test_partial_table_composes_with_changelog_and_rebucket(spark):
+def test_partial_table_composes_with_changelog_and_rebucket(spark, tmp_path):
     """Maintenance surfaces work unchanged on a partial-update table:
     changes_between classifies per-column updates as row-level
     update_before/after pairs; rebucket preserves values AND shadow seqs."""
     t = HashMergeTable.create(
         spark,
-        tempfile.mkdtemp(prefix="pt_mix_"),
+        str(tmp_path),
         partial_schema([T.StructField("title", T.StringType(), True)]),
         n_buckets=2,
         mode="cow",
@@ -339,14 +338,14 @@ def test_partial_table_composes_with_changelog_and_rebucket(spark):
     assert state == [("a", "t3", 3), ("b", "t2", 2), ("c", "t4", 4)]
 
 
-def test_partial_table_schema_evolution_adds_tracked_column(spark):
+def test_partial_table_schema_evolution_adds_tracked_column(spark, tmp_path):
     """A sparse feed grows a new tracked column mid-stream: evolve the
     table (metadata-only — value + shadow seq columns added), then merge
     epochs that carry it; old rows read back with NULL/NULL for the new
     pair, existing cells untouched."""
     t = HashMergeTable.create(
         spark,
-        tempfile.mkdtemp(prefix="pt_evo_"),
+        str(tmp_path),
         partial_schema([T.StructField("title", T.StringType(), True)]),
         n_buckets=2,
         mode="cow",
@@ -407,7 +406,7 @@ def test_hash_fetch_fold_never_sorts_the_payload(spark):
     assert "Sort " not in phys, phys
 
 
-def test_merge_partial_fold_strategy_auto_switch(spark, monkeypatch):
+def test_merge_partial_fold_strategy_auto_switch(spark, monkeypatch, tmp_path):
     """merge_partial picks the fold strategy from the src_rows hint (same
     footer-derived discipline as the compaction auto-switch): small slices
     take the cheaper one-aggregate sort_agg; large or UNKNOWN-size slices
@@ -422,17 +421,17 @@ def test_merge_partial_fold_strategy_auto_switch(spark, monkeypatch):
         return orig(*a, **kw)
 
     monkeypatch.setattr(P, "fold_partial_updates", spy)
-    t = _make_table(spark, 'autosw_')
+    t = _make_table(spark, tmp_path / "autosw")
     evs = _random_events(21, n=60, keys=10)
     df = spark.createDataFrame(evs, EVENT_SCHEMA)
     t.merge_partial(df.where("seq < 30"), 0, VALUE_COLS, src_rows=30)
     t.merge_partial(df.where("seq >= 30"), 1, VALUE_COLS, src_rows=5_000_000)
-    t2 = _make_table(spark, 'autosw2_')
+    t2 = _make_table(spark, tmp_path / "autosw2")
     t2.merge_partial(df.where("seq < 30"), 0, VALUE_COLS)  # size unknown
     assert seen == ["sort_agg", "hash_fetch", "hash_fetch"]
     # and the mixed-strategy replay still matches the interpreter
     assert _rows_from_table(t.read()) == _rows_from_table(
-        _replay(spark, _make_table(spark, 'autosw3_'), evs).read()
+        _replay(spark, _make_table(spark, tmp_path / "autosw3"), evs).read()
     )
 
 

@@ -13,7 +13,6 @@ i.e. exactly the stats any parquet reader consults for skipping.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyarrow.parquet as pq
 import pytest
@@ -53,10 +52,10 @@ def _source(spark):
     )
 
 
-def _make(spark, sort_order, prefix):
+def _make(spark, sort_order, path):
     t = HashMergeTable.create(
         spark,
-        tempfile.mkdtemp(prefix=prefix),
+        str(path),
         SCHEMA,
         n_buckets=2,
         mode="cow",
@@ -87,8 +86,11 @@ def _rowgroup_ranges(path, col):
 
 
 @pytest.fixture(scope="module")
-def tables(spark):
-    return _make(spark, ["v"], "srt_"), _make(spark, None, "unsrt_")
+def tables(spark, tmp_path_factory):
+    return (
+        _make(spark, ["v"], tmp_path_factory.mktemp("srt")),
+        _make(spark, None, tmp_path_factory.mktemp("unsrt")),
+    )
 
 
 def test_sorted_rowgroups_are_tight_and_disjoint(tables):
@@ -136,8 +138,8 @@ def test_sort_order_does_not_change_table_content(tables):
     assert a == b and len(a) == N_ROWS
 
 
-def test_sort_order_evolution_is_metadata_only_then_applies(spark):
-    t = _make(spark, None, "evo_")
+def test_sort_order_evolution_is_metadata_only_then_applies(spark, tmp_path):
+    t = _make(spark, None, tmp_path)
     files_before = sorted(_data_files(t))
     t.set_sort_order(["v"])
     assert sorted(_data_files(t)) == files_before  # metadata-only commit
@@ -150,17 +152,17 @@ def test_sort_order_evolution_is_metadata_only_then_applies(spark):
     assert t.read().count() == N_ROWS
 
 
-def test_set_sort_order_rejects_unknown_column(spark):
-    t = _make(spark, None, "rej_")
+def test_set_sort_order_rejects_unknown_column(spark, tmp_path):
+    t = _make(spark, None, tmp_path)
     with pytest.raises(ValueError, match="not in table schema"):
         t.set_sort_order(["nope"])
 
 
-def test_mor_deltas_unsorted_until_compaction(spark):
+def test_mor_deltas_unsorted_until_compaction(spark, tmp_path):
     """MOR hot path stays write-optimized: delta appends are unsorted;
     compact_table (the rewrite) applies the declared order."""
     t = HashMergeTable.create(
-        spark, tempfile.mkdtemp(prefix="mor_srt_"), SCHEMA, n_buckets=2,
+        spark, str(tmp_path), SCHEMA, n_buckets=2,
         mode="mor", sort_order=["v"], write_options=SMALL_GROUPS,
     )
     t.merge(_source(spark), epoch=0)

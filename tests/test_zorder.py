@@ -16,7 +16,6 @@ footers (pyarrow) — exactly the stats any parquet reader consults.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyarrow.parquet as pq
 import pytest
@@ -59,9 +58,9 @@ def _source(spark):
     )
 
 
-def _make(spark, prefix):
+def _make(spark, path):
     t = HashMergeTable.create(
-        spark, tempfile.mkdtemp(prefix=prefix), SCHEMA, n_buckets=2,
+        spark, str(path), SCHEMA, n_buckets=2,
         mode="cow", write_options=SMALL_GROUPS,
     )
     t.merge(_source(spark), epoch=0, src_keys_broadcastable=False)
@@ -98,18 +97,18 @@ def _mean_span(t, col):
 
 
 @pytest.fixture(scope="module")
-def tables(spark):
+def tables(spark, tmp_path_factory):
     """Same data three ways: z-ordered on (x, y), linearly sorted on
     (x, y), unsorted. Z-order cuts sample the loaded table, then the
     rebucket rewrite applies the clustering (sort orders bind to
     rewrites)."""
-    z = _make(spark, "zord_")
+    z = _make(spark, tmp_path_factory.mktemp("zord"))
     assert z.set_sort_order(["x", "y"], zorder=True)["strategy"] == "zorder"
     z.rebucket(4)
-    lin = _make(spark, "lin_")
+    lin = _make(spark, tmp_path_factory.mktemp("lin"))
     lin.set_sort_order(["x", "y"])
     lin.rebucket(4)
-    return z, lin, _make(spark, "uns_")
+    return z, lin, _make(spark, tmp_path_factory.mktemp("uns"))
 
 
 def test_zorder_rowgroups_tight_on_every_dimension(tables):
@@ -154,10 +153,10 @@ def test_zorder_does_not_change_table_content(spark, tables):
     assert a == b and len(a) == N_ROWS
 
 
-def test_zorder_on_string_column_runs(spark):
+def test_zorder_on_string_column_runs(spark, tmp_path):
     """String sort columns rank by a 56-bit lexicographic prefix — the
     mechanism must run end-to-end and preserve content."""
-    t = _make(spark, "zstr_")
+    t = _make(spark, tmp_path)
     t.set_sort_order(["lang", "x"], zorder=True, bits=4)
     t.rebucket(4)
     assert t.read().count() == N_ROWS
@@ -176,10 +175,10 @@ def test_zorder_on_string_column_runs(spark):
     assert cand <= 0.7 * tot, (cand, tot)
 
 
-def test_zorder_survives_sort_column_rename(spark):
+def test_zorder_survives_sort_column_rename(spark, tmp_path):
     """Cut points are stored positionally, so a metadata-only rename of a
     sort column must not detach them."""
-    t = _make(spark, "zren_")
+    t = _make(spark, tmp_path)
     t.set_sort_order(["x", "y"], zorder=True)
     t.rename_column("x", "x_coord")
     assert t._snapshot()["sort_order"] == ["x_coord", "y"]
@@ -188,9 +187,9 @@ def test_zorder_survives_sort_column_rename(spark):
     assert t.read().count() == N_ROWS
 
 
-def test_zorder_guards(spark):
+def test_zorder_guards(spark, tmp_path):
     t = HashMergeTable.create(
-        spark, tempfile.mkdtemp(prefix="zgrd_"), SCHEMA, n_buckets=2,
+        spark, str(tmp_path), SCHEMA, n_buckets=2,
     )
     with pytest.raises(ValueError, match="load data|NULL"):
         t.set_sort_order(["x", "y"], zorder=True)  # empty: nothing to sample
@@ -205,10 +204,10 @@ def test_zorder_guards(spark):
     assert snap.get("sort_strategy") == "linear" and "sort_cuts" not in snap
 
 
-def test_zorder_cli(spark):
+def test_zorder_cli(spark, tmp_path):
     from read_comp_data_pipeline_spark.__main__ import main
 
-    t = _make(spark, "zcli_")
+    t = _make(spark, tmp_path)
     assert main(["sort-order", "--table", t.path, "--by", "x", "y",
                  "--zorder", "--bits", "5"]) == 0
     assert t._snapshot()["sort_strategy"] == "zorder"
