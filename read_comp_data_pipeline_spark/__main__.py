@@ -610,6 +610,12 @@ def main(argv: list[str] | None = None) -> int:
         t = HashMergeTable(spark, args.table)
         snap = t._snapshot()
         staged = t.staged_snapshot()
+        audits = os.path.join(args.table, "audits")
+        # audit records only, not the temp file of an interrupted write
+        rejected = sum(
+            n.startswith("e") and n.endswith(".json")
+            for n in (os.listdir(audits) if os.path.isdir(audits) else [])
+        )
         print(json.dumps({
             "rows": t.read().count(),
             "last_epoch": t.last_epoch,
@@ -623,10 +629,7 @@ def main(argv: list[str] | None = None) -> int:
             "tags": t.tags(),
             **({"timeline": int(snap["timeline"])} if snap.get("timeline") else {}),
             **({"staged_epoch": int(staged["epoch"])} if staged else {}),
-            **(lambda d: {"audit_rejections": len(d)} if d else {})(
-                sorted(os.listdir(os.path.join(args.table, "audits")))
-                if os.path.isdir(os.path.join(args.table, "audits")) else []
-            ),
+            **({"audit_rejections": rejected} if rejected else {}),
         }))
         t.manifest().orderBy("epoch", "partition").show(20, truncate=False)
     return 0

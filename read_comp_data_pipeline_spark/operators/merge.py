@@ -76,11 +76,12 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -108,6 +109,47 @@ def bucket_expr(n_buckets: int, key_cols: list[str] | None = None):
         (n_buckets, key_cols),
         lambda: F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int"),
     )
+
+
+def shuffle_by_bucket(
+    df: DataFrame,
+    n_buckets: int,
+    buckets: list[int] | None = None,
+    n_salts: int = 1,
+    order_col: str = "seq",
+) -> DataFrame:
+    """The engine's bucket shuffle: ``df`` (carrying ``_b``) is placed by
+    partition id, one bucket per partition, so a bucketed write runs one
+    task and writes one file per bucket. A hash of ``_b`` would not: it
+    sends 8 buckets to 5 partitions, leaving 3 tasks empty and one task
+    with 3 buckets.
+
+    ``buckets``: only these buckets are written (a COW subset); partition
+    ``i`` holds the ``i``-th of them in sorted order. ``n_salts`` > 1
+    splits each bucket over that many partitions by a hash of
+    ``order_col``: partition ``_b * n_salts + salt``."""
+    whole = buckets is None or sorted(buckets) == list(range(n_buckets))
+    subset = None if whole else tuple(sorted(int(b) for b in buckets))
+    n_parts, pid = _PROJECTIONS.get(
+        ("placement", n_buckets, subset, n_salts, order_col),
+        lambda: _placement(n_buckets, subset, n_salts, order_col),
+    )
+    return df.repartitionById(n_parts, pid)
+
+
+def _placement(n_buckets, subset, n_salts, order_col) -> tuple[int, Column]:
+    b = F.col("_b")
+    if subset is not None:
+        rank = F.array_position(F.array(*[F.lit(x) for x in subset]), b) - 1
+        return len(subset), rank.cast("int")
+    if n_salts == 1:
+        return n_buckets, b
+    salt = F.pmod(F.xxhash64(order_col), F.lit(n_salts))
+    return n_buckets * n_salts, (b * n_salts + salt).cast("int")
+
+
+# the temp name atomic_write renames from: .<name>.<uuid4 hex>.tmp
+_ATOMIC_TMP = re.compile(r"\..+\.[0-9a-f]{32}\.tmp")
 
 
 def atomic_write(path: str, data: str | bytes) -> None:
@@ -651,9 +693,7 @@ class HashMergeTable:
         return True
 
     def _constraints_referencing(self, snap: dict, col: str) -> list[str]:
-        import re as _re
-
-        pat = _re.compile(rf"\b{_re.escape(col)}\b")
+        pat = re.compile(rf"\b{re.escape(col)}\b")
         return [n for n, e in (snap.get("constraints") or {}).items() if pat.search(e)]
 
     def rename_column(self, old: str, new: str) -> dict[str, Any]:
@@ -916,8 +956,7 @@ class HashMergeTable:
         bucket written) at its new dir, dropping those left empty. Returns
         the row count per repointed bucket, empty ones included."""
         out_path = os.path.join(self.path, data_dir)
-        n_parts = snap["n_buckets"] if buckets is None else len(buckets)
-        self._write_bucketed(snap, df, n_parts, out_path)
+        self._write_bucketed(snap, df, buckets, out_path)
         written = self._written_bucket_counts(out_path)
         rows = written if buckets is None else {int(b): written.get(int(b), 0) for b in buckets}
         entries = {} if buckets is None else dict(snap["buckets"])
@@ -978,12 +1017,15 @@ class HashMergeTable:
         }
 
     def _write_bucketed(
-        self, snap: dict, merged: DataFrame, n_parts: int, out_path: str
+        self, snap: dict, merged: DataFrame, buckets: list[int] | None, out_path: str
     ) -> None:
         """Shared bucket-partitioned data write (COW epochs, MOR compaction,
-        rebucket): one shuffle keyed by bucket → exactly one file per bucket
-        dir (without it: shuffle_partitions × n_buckets tiny files, and the
-        next epoch's read pays for every one of them).
+        rebucket, delete_where): one shuffle that gives each bucket its own
+        task (:func:`shuffle_by_bucket`; ``buckets``: the COW subset, None
+        for every bucket) → exactly one file per bucket dir, and no task
+        writes two buckets while another sits empty. Without the shuffle:
+        shuffle_partitions × n_buckets tiny files, and the next epoch's
+        read pays for every one of them.
 
         Honors the snapshot's declared ``sort_order`` (Iceberg-style table
         sort order): rows are sorted WITHIN each bucket task before the
@@ -997,7 +1039,7 @@ class HashMergeTable:
         (e.g. parquet.block.size) tune row-group granularity: smaller row
         groups = finer skipping, more footer metadata.
         """
-        shuffled = merged.repartition(n_parts, F.col("_b"))
+        shuffled = shuffle_by_bucket(merged, snap["n_buckets"], buckets)
         sort_order = snap.get("sort_order") or []
         if sort_order and snap.get("sort_strategy") == "zorder":
             cur = T.StructType.fromJson(snap["schemas"][snap["current_schema_id"]])
@@ -1204,7 +1246,8 @@ class HashMergeTable:
     ) -> dict[str, Any]:
         """Merge-on-read arm: append the compacted slice (op retained) as a
         bucket-partitioned delta — no target read, no join, no rewrite.
-        One shuffle-free write per epoch; reads reconcile (see read())."""
+        One write and one bucket shuffle per epoch; reads reconcile (see
+        read())."""
         n_buckets = snap["n_buckets"]
         key_cols = snap["key_cols"]
         cur_schema = T.StructType.fromJson(snap["schemas"][snap["current_schema_id"]])
@@ -1215,22 +1258,16 @@ class HashMergeTable:
         with_op = _align(source, with_op_schema, keep=("_b",) if pre_bucketed else ())
         data_dir = f"delta/e{epoch:010d}"
         out_path = os.path.join(self.path, data_dir)
-        if pre_bucketed:
-            # the ingest loop already placed the one full-row shuffle
-            # (bucket+salt, BEFORE the extraction expressions — see
-            # ingest.prebucket_for_merge); each task holds whole
-            # (bucket, salt) groups, so the partitionBy write emits a
-            # bounded ≤ n_salts files per bucket with no further shuffle
-            with_op.write.mode("overwrite").partitionBy("_b").parquet(out_path)
-        else:
-            delta = with_op.withColumn("_b", bucket_expr(n_buckets, key_cols))
-            # single action: shuffle keyed by bucket → one file per bucket dir
-            (
-                delta.repartition(n_buckets, F.col("_b"))
-                .write.mode("overwrite")
-                .partitionBy("_b")
-                .parquet(out_path)
+        if not pre_bucketed:
+            # single action: one task per bucket → one file per bucket dir
+            with_op = shuffle_by_bucket(
+                with_op.withColumn("_b", bucket_expr(n_buckets, key_cols)), n_buckets
             )
+        # pre-bucketed: the ingest loop already placed the one full-row
+        # shuffle BEFORE the extraction expressions
+        # (ingest.prebucket_for_merge); each task holds one (bucket, salt)
+        # pair, so the write emits ≤ n_salts files per bucket
+        with_op.write.mode("overwrite").partitionBy("_b").parquet(out_path)
         rows = dict(sorted(self._written_bucket_counts(out_path).items()))
         if sum(rows.values()):
             snap["deltas"].append(
@@ -1439,9 +1476,12 @@ class HashMergeTable:
 
     def vacuum(self, keep_snapshots: int = 1) -> dict[str, Any]:
         """Delete data directories unreferenced by the last ``keep_snapshots``
-        snapshots, and the expired snapshot files. Safe ordering: the
-        CURRENT pointer is never touched; only files no retained snapshot
-        references are removed (Iceberg expire_snapshots analogue).
+        snapshots, the expired snapshot files, and the temp files an
+        interrupted :func:`atomic_write` left in the table root,
+        ``snapshots/``, ``audits/``, ``manifest/`` and ``metrics/``. Safe
+        ordering: the CURRENT pointer is never touched; only files no
+        retained snapshot references are removed (Iceberg expire_snapshots
+        analogue).
         Tagged snapshots (and everything they reference) are always kept."""
         import shutil
 
@@ -1486,7 +1526,17 @@ class HashMergeTable:
             if v not in keep_versions:
                 os.remove(os.path.join(self.path, "snapshots", name))
                 removed_snaps += 1
-        return {"removed_data_dirs": removed_dirs, "removed_snapshots": removed_snaps}
+        # temp files of atomic_write calls that died before their rename;
+        # the table's one writer is this process, so none is in flight
+        removed_tmp = 0
+        for sub in ("", "snapshots", "audits", "manifest", "metrics"):
+            d = os.path.join(self.path, sub)
+            for name in os.listdir(d) if os.path.isdir(d) else ():
+                if _ATOMIC_TMP.fullmatch(name):
+                    os.remove(os.path.join(d, name))
+                    removed_tmp += 1
+        return {"removed_data_dirs": removed_dirs, "removed_snapshots": removed_snaps,
+                "removed_temp_files": removed_tmp}
 
     # -- write-audit-publish staging ----------------------------------------------
 

@@ -15,6 +15,7 @@ surviving row per key.
 
 from __future__ import annotations
 
+import math
 import os
 import time
 from dataclasses import dataclass, field
@@ -28,7 +29,12 @@ from read_comp_data_pipeline_spark.functions.extract import (
     title_expr,
 )
 from read_comp_data_pipeline_spark.operators.compact import compact_latest
-from read_comp_data_pipeline_spark.operators.merge import HashMergeTable, atomic_write
+from read_comp_data_pipeline_spark.operators.merge import (
+    HashMergeTable,
+    atomic_write,
+    bucket_expr,
+    shuffle_by_bucket,
+)
 from read_comp_data_pipeline_spark.schemas import TARGET_SCHEMA
 from read_comp_data_pipeline_spark.session import PerJVM, observed_or
 from read_comp_data_pipeline_spark.sources import wal as wal_src
@@ -207,32 +213,50 @@ def validate_slice(
     return good, bad
 
 
+PREBUCKET_MIN_EVENTS = 500_000
+
+
 def prebucket_for_merge(
     df: DataFrame, n_buckets: int, parallelism: int, order_col: str = "seq"
 ) -> DataFrame:
-    """Place the epoch's ONE full-row shuffle BEFORE extraction:
-    repartition by (bucket, salt) into max(n_buckets, ~3×cores) partitions.
+    """Place the epoch's ONE full-row shuffle BEFORE extraction: each
+    bucket gets its own partition, split by a salt of ``order_col`` into
+    ``n_salts = ceil(parallelism / n_buckets)`` partitions, the fewest
+    that fill the cores (:func:`merge.shuffle_by_bucket`).
 
     Why: scan parallelism is capped by the source's row-group count
-    (wal.epoch_stats n_read_units) — a WAL epoch laid out as a few big
-    files would bind the expensive extraction stage to that layout (e.g.
-    41 read units on 32 cores = 1.3 task waves with stragglers). After
-    this shuffle extraction runs at full cluster parallelism, hot buckets are
-    split across salts, and the MOR delta write needs no further shuffle
-    (each task holds whole (bucket, salt) groups → ≤ n_salts files per
-    bucket). Same total shuffle count as before — the shuffle just moved
-    to where it also buys extraction parallelism.
+    (wal.epoch_stats n_read_units) — a one-file WAL epoch runs compaction
+    and extraction in ONE task, and a few big files bind the expensive
+    extraction stage to that layout (e.g. 41 read units on 32 cores = 1.3
+    task waves with stragglers). After this shuffle extraction runs at
+    full cluster parallelism, and the MOR delta write needs no further
+    shuffle (each task holds one (bucket, salt) pair → ≤ n_salts files per
+    bucket): on MOR the shuffle count is unchanged — the shuffle just
+    moved to where it also buys extraction parallelism. More salts than
+    the cores need only add tasks and files per bucket.
     """
-    import math
-
-    from read_comp_data_pipeline_spark.operators.merge import bucket_expr
-
-    n_salts = max(1, math.ceil(3 * parallelism / n_buckets))
-    target = n_buckets * n_salts
-    out = df.withColumn("_b", bucket_expr(n_buckets)).withColumn(
-        "_salt", F.pmod(F.xxhash64(order_col), F.lit(n_salts))
+    n_salts = max(1, math.ceil(parallelism / n_buckets))
+    return shuffle_by_bucket(
+        df.withColumn("_b", bucket_expr(n_buckets)), n_buckets,
+        n_salts=n_salts, order_col=order_col,
     )
-    return out.repartition(target, F.col("_b"), F.col("_salt")).drop("_salt")
+
+
+def bucket_before_extraction(
+    df: DataFrame, n_buckets: int, mode: str, events: int, read_units: int,
+    min_events: int = PREBUCKET_MIN_EVENTS,
+) -> tuple[DataFrame, bool]:
+    """The one rule for where an epoch's bucket shuffle goes: before
+    extraction (:func:`prebucket_for_merge`) when the scan is narrower than
+    the cluster (``read_units < 2 × defaultParallelism``), after it
+    otherwise. MOR's delta write pays the shuffle anyway, so on MOR it only
+    moves; on COW the merge plan shuffles again, so a COW epoch moves it
+    only from ``min_events`` events up. Returns the compacted slice and
+    whether it was prebucketed."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if read_units >= 2 * par or (mode != "mor" and events < min_events):
+        return df, False
+    return prebucket_for_merge(df, n_buckets, par), True
 
 
 @dataclass
@@ -265,7 +289,7 @@ def run_ingest(
     validator=None,
     max_attempts: int = 3,
     compact_threshold: int = 5_000_000,
-    prebucket_min_events: int = 500_000,
+    prebucket_min_events: int = PREBUCKET_MIN_EVENTS,
     maintain_every: int | None = 50,
     keep_snapshots: int = 25,
     audit=None,
@@ -309,6 +333,12 @@ def run_ingest(
     epoch degrades to a heavier shuffle instead of OOMing the driver
     (operators/compact.py docstring; the count upper-bounds the key count).
 
+    ``prebucket_min_events``: a COW epoch whose scan is narrower than the
+    cluster moves its bucket shuffle before extraction only from this many
+    events up, because the COW merge shuffles again
+    (:func:`bucket_before_extraction`). A narrow MOR epoch always moves it:
+    its delta write needs no other shuffle.
+
     ``maintain_every``/``keep_snapshots``: automatic table maintenance —
     every ``maintain_every`` committed epochs the loop runs
     ``vacuum(keep_snapshots)`` (expire old snapshots + unreferenced data
@@ -332,8 +362,8 @@ def run_ingest(
             validator = constraints_validator(declared)
 
     # CPU-heavy per-row extraction wants more, smaller scan splits than the
-    # I/O-oriented 128MB default — the scan IS the extraction's parallelism
-    # (no pre-extraction repartition shuffle). Restored on exit.
+    # I/O-oriented 128MB default — unless the epoch is bucketed before
+    # extraction, the scan IS the extraction's parallelism. Restored on exit.
     prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
 
@@ -363,11 +393,9 @@ def _run_epochs(
     spark, table, wal_path, table_path, hi_epoch, stats,
     *, extract, mode, compact_every, quarantine, fail_after_epoch,
     validator=None, max_attempts=3, compact_threshold=5_000_000,
-    prebucket_min_events=500_000, maintain_every=50, keep_snapshots=25,
+    prebucket_min_events=PREBUCKET_MIN_EVENTS, maintain_every=50, keep_snapshots=25,
     audit=None, audit_max_shrink=None,
 ) -> None:
-    from read_comp_data_pipeline_spark.operators.merge import bucket_expr
-
     staging = audit is not None or audit_max_shrink is not None
     # 'before' carries across epochs: publish is a pointer swing, so this
     # epoch's 'after' IS the next epoch's 'before' — on MOR that halves
@@ -394,12 +422,6 @@ def _run_epochs(
             strategy = "broadcast_hash_semi"
         else:
             strategy = "broadcast_semi"
-        # parallelism guard: a large epoch whose file layout can't feed the
-        # cluster (few row groups) gets its bucket shuffle moved BEFORE the
-        # extraction so it runs at full width (prebucket_for_merge)
-        par = spark.sparkContext.defaultParallelism
-        do_prebucket = cnt >= prebucket_min_events and units < 2 * par
-
         quarantine_pre_commit = None
         if quarantine:
             # re-drive previously quarantined rows (attempt escalation:
@@ -462,12 +484,14 @@ def _run_epochs(
 
         # broadcast_semi compaction: only (key, seq) pairs shuffle; the
         # content payload flows scan → semi-join filter → extraction →
-        # bucket write with exactly ONE full-row shuffle (the bucket
-        # layout — placed before extraction when the scan can't feed the
-        # cluster, after it otherwise).
-        compacted = compact_latest(slice_df, strategy=strategy)
-        if do_prebucket:
-            compacted = prebucket_for_merge(compacted, table.n_buckets, par)
+        # bucket write. Parallelism guard: an epoch whose file layout can't
+        # feed the cluster (few row groups) gets its bucket shuffle moved
+        # BEFORE the extraction so it runs at full width; on MOR that is
+        # still the epoch's one full-row shuffle.
+        compacted, do_prebucket = bucket_before_extraction(
+            compact_latest(slice_df, strategy=strategy), table.n_buckets, mode,
+            cnt, units, prebucket_min_events,
+        )
         src = prepare_target_rows(compacted) if extract else compacted
 
         # affected-bucket hint for COW (pruned key-columns-only scan): the

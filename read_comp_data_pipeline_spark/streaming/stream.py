@@ -33,7 +33,7 @@ from read_comp_data_pipeline_spark.operators.merge import HashMergeTable
 from read_comp_data_pipeline_spark.schemas import TARGET_SCHEMA, WAL_SCHEMA
 from read_comp_data_pipeline_spark.streaming.evolve import ensure_evolved
 from read_comp_data_pipeline_spark.streaming.ingest import (
-    prebucket_for_merge,
+    bucket_before_extraction,
     prepare_target_rows,
 )
 
@@ -106,14 +106,12 @@ def stream_ingest(
             # per-key seq-aware (operators/merge.py), so a mixed batch
             # (replayed prefix + new suffix after checkpoint loss) applies
             # the new rows and no-ops the replayed ones
-            compacted = compact_latest(batch_df, strategy=strategy)
-            if n >= 500_000:
-                # big batch: move the bucket shuffle before extraction so
-                # its parallelism doesn't depend on file layout
-                compacted = prebucket_for_merge(
-                    compacted, table.n_buckets,
-                    spark.sparkContext.defaultParallelism,
-                )
+            # the batch loop's rule for where the bucket shuffle goes: the
+            # cached batch's partitions are its scan width
+            compacted, _ = bucket_before_extraction(
+                compact_latest(batch_df, strategy=strategy), table.n_buckets,
+                mode, n, batch_df.rdd.getNumPartitions(),
+            )
             src = prepare_target_rows(compacted)
             staging = audit_max_shrink is not None
             table.merge(

@@ -488,21 +488,28 @@ def test_iceberg_merge_statement_parses_with_all_arms(spark):
 
 
 def test_prebucketed_ingest_converges_and_bounds_files(spark, wal_path, tmp_path):
-    """The pre-UDF bucket+salt shuffle (extraction-parallelism guard) must
-    produce the identical final state, and MOR delta dirs must hold a
-    bounded <= n_salts files per bucket (no small-files explosion)."""
+    """The pre-extraction bucket+salt shuffle (extraction-parallelism
+    guard) must produce the identical final state, and MOR delta dirs
+    must hold a bounded <= n_salts files per bucket (no small-files
+    explosion). A one-file MOR epoch prebuckets at the default
+    ``prebucket_min_events``; a one-file COW epoch of that size does not."""
     import math
     import os
 
+    from read_comp_data_pipeline_spark.sources.wal import epoch_footers
+
     tbl = str(tmp_path / "t")
-    stats = run_ingest(spark, wal_path, tbl, n_buckets=4, mode="mor",
-                       compact_every=100, prebucket_min_events=0)
-    assert stats.per_epoch and all(e["prebucketed"] for e in stats.per_epoch)
+    forced = run_ingest(spark, wal_path, tbl, n_buckets=4, mode="mor", max_epoch=2,
+                        compact_every=100, prebucket_min_events=0)
+    default = run_ingest(spark, wal_path, tbl, n_buckets=4, mode="mor",
+                         compact_every=100)
+    epochs = forced.per_epoch + default.per_epoch
+    assert default.per_epoch and all(e["prebucketed"] for e in epochs)
+    assert epoch_footers(wal_path, default.per_epoch[0]["epoch"]).n_read_units == 1
     expected = _final_expected(spark, wal_path)
     assert _state_digest(HashMergeTable(spark, tbl).read()) == _state_digest(expected)
 
-    par = spark.sparkContext.defaultParallelism
-    n_salts = max(1, math.ceil(3 * par / 4))
+    n_salts = math.ceil(spark.sparkContext.defaultParallelism / 4)
     ddir = os.path.join(tbl, "delta")
     for e in sorted(os.listdir(ddir)):
         for b in os.listdir(os.path.join(ddir, e)):
@@ -511,6 +518,10 @@ def test_prebucketed_ingest_converges_and_bounds_files(spark, wal_path, tmp_path
             files = [n for n in os.listdir(os.path.join(ddir, e, b))
                      if n.endswith(".parquet")]
             assert 1 <= len(files) <= n_salts, (e, b, len(files))
+
+    cow = run_ingest(spark, wal_path, str(tmp_path / "c"), n_buckets=4, mode="cow",
+                     max_epoch=0)
+    assert not cow.per_epoch[0]["prebucketed"]
 
 
 def test_missing_committed_segment_fails_loudly(spark, tmp_path):

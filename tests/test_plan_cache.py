@@ -28,7 +28,11 @@ from read_comp_data_pipeline_spark.operators.merge import HashMergeTable, bucket
 from read_comp_data_pipeline_spark.schemas import TARGET_SCHEMA
 from read_comp_data_pipeline_spark.session import PerJVM, observed_or
 from read_comp_data_pipeline_spark.sources import wal as wal_src
-from read_comp_data_pipeline_spark.streaming.ingest import prepare_target_rows, run_ingest
+from read_comp_data_pipeline_spark.streaming.ingest import (
+    prebucket_for_merge,
+    prepare_target_rows,
+    run_ingest,
+)
 
 EPOCH_SIZE = 500
 
@@ -169,16 +173,25 @@ def _executed(df) -> str:
     return re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+", "#", buf.getvalue()))
 
 
-def _epoch_slice(spark, wal_path, epoch, percall: bool, strategy="broadcast_hash_semi"):
+def _epoch_slice(
+    spark, wal_path, epoch, percall: bool, strategy="broadcast_hash_semi", buckets=None
+):
     """One epoch's extracted slice, read with the cached schema and built
-    from cached pieces, or inferred and built per call."""
+    from cached pieces, or inferred and built per call. ``buckets``: bucket
+    the compacted slice before extraction, as a narrow MOR epoch does."""
     if percall:
         sl = spark.read.parquet(f"{wal_path}/epoch={epoch}").withColumn(
             "epoch", F.lit(epoch).cast("long")
         )
-        return _percall_prepare(_percall_compact(sl, strategy=strategy))
-    sl = wal_src.read_epoch(spark, wal_path, epoch)
-    return prepare_target_rows(compact.compact_latest(sl, strategy=strategy))
+        compacted = _percall_compact(sl, strategy=strategy)
+    else:
+        sl = wal_src.read_epoch(spark, wal_path, epoch)
+        compacted = compact.compact_latest(sl, strategy=strategy)
+    if buckets:
+        compacted = prebucket_for_merge(
+            compacted, buckets, spark.sparkContext.defaultParallelism
+        )
+    return (_percall_prepare if percall else prepare_target_rows)(compacted)
 
 
 # -- plan pinning ------------------------------------------------------------------
@@ -190,11 +203,8 @@ def test_mor_delta_write_plan_unchanged(spark, wal_path, percall):
     )
 
     def delta_write(align, percall_src):
-        src = _epoch_slice(spark, wal_path, 1, percall_src)
-        return (
-            align(src, with_op).withColumn("_b", bucket_expr(4))
-            .repartition(4, F.col("_b"))
-        )
+        src = _epoch_slice(spark, wal_path, 1, percall_src, buckets=4)
+        return align(src, with_op, keep=("_b",))
 
     cached = _executed(delta_write(merge._align, False))
     percall()
@@ -238,10 +248,10 @@ def test_classifier_evaluated_once_per_row(spark, wal_path):
 
 
 def test_steady_mor_epoch_round_trip_ceiling(spark, wal_path, tmp_path, monkeypatch):
-    """One steady-state MOR epoch makes at most 600 py4j round trips
-    (about 200 now). Building every plan piece per call, the same epoch
-    made 2,046, and an epoch of the 5k-event MOR benchmark shape about
-    2,400."""
+    """One steady-state MOR epoch, bucketed before extraction, makes at
+    most 600 py4j round trips (about 200 now). Building every plan piece
+    per call, the same epoch made 2,046, and an epoch of the 5k-event MOR
+    benchmark shape about 2,400."""
     import py4j.clientserver
     import py4j.java_gateway
 
@@ -267,7 +277,7 @@ def test_steady_mor_epoch_round_trip_ceiling(spark, wal_path, tmp_path, monkeypa
         st = run_ingest(spark, wal_path, tbl, n_buckets=8, max_epoch=2, mode="mor")
     finally:
         gc.enable()
-    assert st.epochs_applied == 1
+    assert st.epochs_applied == 1 and st.per_epoch[0]["prebucketed"]
     assert calls[0] <= 600, calls[0]
 
 
