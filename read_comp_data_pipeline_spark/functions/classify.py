@@ -44,6 +44,15 @@ def keyword_hits(content: Column, terms: list[str] | None = None) -> Column:
     WholeStageCodegen), measured at ~2× the cost of the codegen'd sum on
     content-sized strings. Same values, cheaper plan.
 
+    The 13 checks share one ``lower(content)`` node, but Spark's
+    subexpression elimination only shares what every row evaluates: a
+    CASE WHEN's first condition, a COALESCE's first argument, and what
+    appears in every branch. Inside a CASE WHEN branch — as the ingest's
+    ``live()`` wraps every enrichment column — the lowering runs once per
+    term. A caller that wraps the count computes ``lower`` in an
+    unconditional projection of its own and counts over that column
+    (``streaming/ingest._extraction_layers``).
+
     NULL contract: a NULL ``content`` counts as 0 hits (the reference's
     ``sum([t in page for t in terms])`` never sees None — an unfetchable
     page is skipped upstream — and the pre-round-2 ``size(filter(...))``
@@ -51,10 +60,13 @@ def keyword_hits(content: Column, terms: list[str] | None = None) -> Column:
     NULL through the sum and downstream ``least``/aggregations silently
     skip the row instead of scoring it 0.
     """
-    terms = terms or TERMS_BFS
-    low = F.lower(content)
+    return _lowered_hits(F.lower(content), terms)
+
+
+def _lowered_hits(low: Column, terms: list[str] | None = None) -> Column:
+    """:func:`keyword_hits` over a column that is already lowercase."""
     out = None
-    for t in terms:
+    for t in terms or TERMS_BFS:
         e = low.contains(t).cast("int")
         out = e if out is None else out + e
     return F.coalesce(out, F.lit(0))

@@ -54,12 +54,13 @@ def prepare_target_rows(slice_df: DataFrame, enrich: bool = True) -> DataFrame:
     every page, search_scrape.py:1088-1106): keyword hit count, quality
     score, token count, normalized fingerprint. All JVM Column expressions,
     built once per JVM (:func:`_extraction_layers`) and applied as three
-    ``withColumns`` projections.
+    ``withColumns`` projections; the helper columns ``_low``/``_len`` are
+    dropped at the end.
     """
     out = slice_df
     for layer in _LAYERS.get(enrich, lambda: _extraction_layers(enrich)):
         out = out.withColumns(layer)
-    return out
+    return out.drop("_low", "_len") if enrich else out
 
 
 _LAYERS = PerJVM()
@@ -70,12 +71,12 @@ def _extraction_layers(enrich: bool) -> tuple[dict[str, Column], ...]:
     references only columns of the layer before it, so one
     ``withColumns`` per layer builds the same plan as one ``withColumn``
     per column, with 3 analysis passes instead of 8."""
-    from read_comp_data_pipeline_spark.functions.classify import keyword_hits
+    from read_comp_data_pipeline_spark.functions.classify import _lowered_hits
 
     is_del = F.col("op") == "D"
     live = lambda c: F.when(is_del, F.lit(None)).otherwise(c)  # noqa: E731
     content = F.col("content")
-    title = {"title": live(title_expr(content, F.col("path")))}
+    first = {"title": live(title_expr(content, F.col("path")))}
     # O(prefix) lead-section scan as pure JVM expressions: only the first
     # (heading, text) pair is stored, so the scan stops at the first header
     # marker instead of walking the whole document — and the epoch's
@@ -90,30 +91,44 @@ def _extraction_layers(enrich: bool) -> tuple[dict[str, Column], ...]:
         "content_sha": live(content_sha_expr(content)),
     }
     if not enrich:
-        return title, sections
+        return first, sections
     # ingest-grade variants: constant passes over the content, no
     # array-materializing regexes (operators/textstats.py keeps the
     # full-fidelity versions for the analysis catalog — at 10^6+ rows
     # per epoch, regexp_extract_all's per-row token arrays are pure GC
     # pressure the hot path can't afford)
     #
+    # Each heavy subexpression is its own column of the first, unconditional
+    # layer: inside live()'s CASE WHEN branch Spark's subexpression
+    # elimination shares nothing (functions/classify.keyword_hits), so
+    # written there lower(content) would run once per classifier term (13
+    # per row) and length(content) once per use. _low/_len are referenced
+    # several times by the next layers, so CollapseProject keeps their
+    # projection apart.
+    first["_low"] = F.lower(content)
+    first["_len"] = F.length(content)
     # replace-then-length beats split-size HERE despite losing an
     # isolated microbench: split materializes a per-row array of token
     # substrings, and inside the already allocation-heavy extraction
     # projection that extra garbage cost more than replace's single
-    # copy (measured: MOR replay 11.6s -> 17.5s with split-size)
+    # copy (measured: MOR replay 11.6s -> 17.5s with split-size).
+    # octet_length is the byte count a UTF-8 string already holds; a space
+    # is one byte and one character, so the byte difference equals the
+    # character difference without walking the string twice.
     n_tokens = (
-        F.length(content) - F.length(F.replace(content, F.lit(" "), F.lit(""))) + 1
+        F.octet_length(content)
+        - F.octet_length(F.replace(content, F.lit(" "), F.lit("")))
+        + 1
     ).cast("long")
     # kw_hits lands in its own projection and quality references the
-    # COLUMN: the classifier (13 contains over lowered content) is
-    # evaluated once per row, not once per consumer (CollapseProject
-    # keeps the projections apart when an alias is multiply referenced)
-    sections["kw_hits"] = live(keyword_hits(content).cast("int"))
+    # COLUMN: the classifier (13 contains over _low) is evaluated once
+    # per row, not once per consumer
+    sections["kw_hits"] = live(_lowered_hits(F.col("_low")).cast("int"))
+    n_chars = F.col("_len")
     quality = F.round(
         F.least(
             F.lit(1.0),
-            F.when((F.length(content) >= 200) & (F.length(content) <= 50000), 0.5)
+            F.when((n_chars >= 200) & (n_chars <= 50000), 0.5)
             .otherwise(0.2)
             + F.least(F.col("kw_hits").cast("double") / 10.0, F.lit(0.5)),
         ),
@@ -128,7 +143,7 @@ def _extraction_layers(enrich: bool) -> tuple[dict[str, Column], ...]:
         # nothing (measured: one md5 pass ≈ one sha pass over the epoch)
         "fingerprint": live(F.substring(F.col("content_sha"), 1, 32)),
     }
-    return title, sections, scores
+    return first, sections, scores
 
 
 def default_validator(df: DataFrame):
@@ -402,7 +417,11 @@ def _run_epochs(
     # the audit cost (one reconciled count per epoch, not two)
     audit_prev_rows: int | None = None
 
-    for epoch in range(table.last_epoch + 1, hi_epoch + 1):
+    epochs = range(table.last_epoch + 1, hi_epoch + 1)
+    # the tail epoch is fixed for the call: read its seq range once (lag)
+    tail_hi = wal_src.epoch_stats(wal_path, hi_epoch)[1] if epochs else None
+
+    for epoch in epochs:
         # slice metadata from parquet footers (pyarrow, no Spark job): seq
         # range + event count → lag metric + compaction-strategy choice;
         # row-group count → extraction-parallelism guard; footer schema →
@@ -410,7 +429,6 @@ def _run_epochs(
         footers = wal_src.epoch_footers(wal_path, epoch)
         lo, hi, cnt, units = footers[:4]
         slice_df = wal_src.read_epoch(spark, wal_path, epoch, footers)
-        _, tail_hi, _, _ = wal_src.epoch_stats(wal_path, hi_epoch)
         lag = max(0, int(tail_hi) - int(hi)) if (tail_hi is not None and hi is not None) else 0
         # size-based degradation guard: above the threshold the epoch's key
         # set can't be assumed broadcastable — fall back to the shuffle agg.

@@ -194,9 +194,18 @@ def test_time_travel_and_vacuum(spark, wal_path, tmp_path):
         t.read(at_snapshot=early).count()  # expired data may be gone
 
 
-def test_metrics_record_throughput_and_lag(spark, wal_path, tmp_path):
+def test_metrics_record_throughput_and_lag(spark, wal_path, tmp_path, monkeypatch):
+    from read_comp_data_pipeline_spark.sources import wal as wal_src
+
+    tail_reads = []
+    stats = wal_src.epoch_stats
+    monkeypatch.setattr(
+        wal_src, "epoch_stats", lambda path, epoch: tail_reads.append(epoch) or stats(path, epoch)
+    )
     tbl_path = str(tmp_path / "t")
-    run_ingest(spark, wal_path, tbl_path, n_buckets=4, mode="mor")
+    st = run_ingest(spark, wal_path, tbl_path, n_buckets=4, mode="mor")
+    # the lag's tail footers are read once per call, not once per epoch
+    assert st.epochs_applied == N_EVENTS // EPOCH_SIZE and tail_reads == [st.epochs_applied - 1]
     m = HashMergeTable(spark, tbl_path).metrics().toPandas()
     assert (m["events_per_sec"] > 0).all()
     # earlier epochs committed while later WAL epochs were pending → lag > 0;

@@ -17,7 +17,7 @@ from pyspark.sql import Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from read_comp_data_pipeline_spark.functions.classify import TERMS_BFS, keyword_hits
+from read_comp_data_pipeline_spark.functions.classify import TERMS_BFS, _lowered_hits
 from read_comp_data_pipeline_spark.functions.extract import (
     content_sha_expr,
     first_section_exprs,
@@ -53,7 +53,11 @@ def _percall_prepare(df):
     is_del = F.col("op") == "D"
     live = lambda c: F.when(is_del, F.lit(None)).otherwise(c)  # noqa: E731
     content = F.col("content")
-    df = df.withColumn("title", live(title_expr(content, F.col("path"))))
+    df = (
+        df.withColumn("title", live(title_expr(content, F.col("path"))))
+        .withColumn("_low", F.lower(content))
+        .withColumn("_len", F.length(content))
+    )
     h1, t1 = first_section_exprs(F.col("title"), content)
     df = (
         df.withColumn("heading", F.when(~is_del, h1))
@@ -61,13 +65,15 @@ def _percall_prepare(df):
         .withColumn("content_sha", live(content_sha_expr(content)))
     )
     n_tokens = (
-        F.length(content) - F.length(F.replace(content, F.lit(" "), F.lit(""))) + 1
+        F.octet_length(content)
+        - F.octet_length(F.replace(content, F.lit(" "), F.lit("")))
+        + 1
     ).cast("long")
-    df = df.withColumn("kw_hits", live(keyword_hits(content).cast("int")))
+    df = df.withColumn("kw_hits", live(_lowered_hits(F.col("_low")).cast("int")))
     quality = F.round(
         F.least(
             F.lit(1.0),
-            F.when((F.length(content) >= 200) & (F.length(content) <= 50000), 0.5)
+            F.when((F.col("_len") >= 200) & (F.col("_len") <= 50000), 0.5)
             .otherwise(0.2)
             + F.least(F.col("kw_hits").cast("double") / 10.0, F.lit(0.5)),
         ),
@@ -77,6 +83,7 @@ def _percall_prepare(df):
         df.withColumn("quality", live(quality))
         .withColumn("n_tokens", live(n_tokens))
         .withColumn("fingerprint", live(F.substring(F.col("content_sha"), 1, 32)))
+        .drop("_low", "_len")
     )
 
 
@@ -237,11 +244,16 @@ def test_mor_read_plan_unchanged(spark, wal_path, tmp_path, percall):
 
 
 def test_classifier_evaluated_once_per_row(spark, wal_path):
-    """kw_hits keeps its own projection: each of the 13 contains checks
-    appears exactly once in the optimized ingest plan."""
+    """Every heavy subexpression of the extraction appears exactly once in
+    the optimized ingest plan: ``lower(content)`` and ``length(content)``
+    each in the unconditional first layer (inside live()'s CASE WHEN
+    branch Spark would evaluate each copy), and each term's containment
+    check over the lowered column in kw_hits' own projection."""
     opt = _epoch_slice(spark, wal_path, 1, False)._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"(?<![\w])lower\(content#\d+\)", opt)) == 1, opt
+    assert len(re.findall(r"(?<![\w])length\(content#\d+\)", opt)) == 1, opt
     for term in TERMS_BFS:
-        assert len(re.findall(rf"Contains\(lower\(content#\d+\), {term}\)", opt)) == 1, term
+        assert len(re.findall(rf"Contains\(_low#\d+, {term}\)", opt)) == 1, term
 
 
 # -- round trips and cache scope ---------------------------------------------------
