@@ -41,7 +41,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from read_comp_data_pipeline_spark.operators.merge import atomic_write
+from read_comp_data_pipeline_spark.operators.merge import atomic_write, same_content
 
 _CURSOR = "CURSOR"
 
@@ -201,12 +201,7 @@ def follow_changes(
             # exact version vacuumed: fall back to the latest same-epoch
             # snapshot, which is safe only if content and timeline match
             base = source.snapshot_at_epoch(from_epoch)  # raises if vacuumed
-            ok = (
-                int(base.get("epoch", -1)) == from_epoch
-                and int(base.get("timeline", 0)) == int(cursor.get("timeline", 0))
-                and int(base.get("content_rev", 0)) == int(cursor.get("content_rev", 0))
-            )
-            if not ok:
+            if not same_content(base, cursor):
                 # epoch mismatch = vacuumed past the cursor; timeline
                 # mismatch = rolled back below the cursor and replayed;
                 # content_rev mismatch = a delete_where landed and its

@@ -1,9 +1,6 @@
 """HashMergeTable — the MERGE-upsert sink (SURVEY.md §2.1 S6-S8).
 
-Iceberg-style semantics on plain parquet (the Iceberg runtime jar is not
-available in this sandbox; the interface is what spark-submit would point
-at a real Iceberg catalog — see ``merge_sql_for_iceberg`` at the bottom for
-the exact statement the engine issues when one is present):
+Iceberg-style semantics on plain parquet:
 
 * **table = data files + snapshot pointer.** Data lives under
   ``data/e{epoch}/_b={bucket}/*.parquet``; a snapshot JSON maps every
@@ -163,6 +160,18 @@ def atomic_write(path: str, data: str | bytes) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
+
+
+def same_content(a: dict[str, Any], b: dict[str, Any]) -> bool:
+    """Whether two snapshot-like dicts name the same table rows: same
+    ``epoch``, ``timeline`` and ``content_rev``. An epoch commit moves the
+    epoch, a rollback the timeline and ``delete_where`` the content_rev;
+    compaction, vacuum, sort, rebucket and sidecar folding move none of
+    them, so a count or diff base taken at ``a`` still holds at ``b``."""
+    return all(
+        int(a.get(k, d)) == int(b.get(k, d))
+        for k, d in (("epoch", -1), ("timeline", 0), ("content_rev", 0))
+    )
 
 
 def _parquet_bytes(table) -> bytes:
@@ -348,8 +357,8 @@ class HashMergeTable:
     N+1 and the second pointer swing would win, silently dropping the
     first commit. That is the documented trade of plain-filesystem
     metadata; on a real catalog the swap point is Iceberg's optimistic
-    CAS commit (``merge_sql_for_iceberg``), which turns the race into a
-    retryable CommitFailedException. Readers are unlimited: they resolve
+    CAS commit, which turns the race into a retryable
+    CommitFailedException. Readers are unlimited: they resolve
     one pointer read and only ever see fully-committed snapshots.
     """
 
@@ -2165,20 +2174,3 @@ def _check_compatible_evolution(old: T.StructType, new: T.StructType) -> None:
                     f"incompatible type change for {f.name!r}: {pair[0]} -> {pair[1]}"
                 )
 
-
-def merge_sql_for_iceberg(
-    target: str, source_view: str, key_cols: list[str] | None = None, order_col: str = "seq"
-) -> str:
-    """The statement this sink issues verbatim on a cluster with the
-    Iceberg runtime (kept here so the sandbox implementation and the
-    cluster deployment share one definition of the MERGE semantics).
-    The ``s.seq > t.seq`` guards make the statement row-level idempotent
-    (a replayed epoch matches on equal seq and changes nothing)."""
-    key_cols = key_cols or KEY_COLS
-    on = " AND ".join(f"t.{c} = s.{c}" for c in key_cols)
-    return (
-        f"MERGE INTO {target} t USING {source_view} s ON {on} "
-        f"WHEN MATCHED AND s.{order_col} > t.{order_col} AND s.op = 'D' THEN DELETE "
-        f"WHEN MATCHED AND s.{order_col} > t.{order_col} THEN UPDATE SET * "
-        "WHEN NOT MATCHED AND s.op != 'D' THEN INSERT *"
-    )

@@ -151,15 +151,11 @@ _CDC_REPLAY_ORACLE = """
 """
 
 
-@_q("cdc_replay_final_state", _CDC_REPLAY_ORACLE)
-def cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE engine, end-to-end, inside the correctness gate: derive a WAL
-    from `events`, replay it epoch-by-epoch through compaction + extraction
-    + MERGE into a HashMergeTable, return the final state. The oracle is
-    the independent latest-non-delete window query — the north_rule
-    convergence check on driver-shared data."""
-    ev = load(spark, sf_dir, "events")
-    wal = ev.select(
+def _flagship_keys() -> list:
+    """The flagship's ``events`` → WAL encoding of seq, key and op: seq is
+    ``event_id``, the (repo, path) key comes from ``user_id``, an error
+    event deletes and a signup inserts."""
+    return [
         F.col("event_id").alias("seq"),
         F.concat(F.lit("u"), (F.col("user_id") % 10).cast("string")).alias("repo"),
         F.concat(F.lit("p"), F.col("user_id").cast("string")).alias("path"),
@@ -167,11 +163,28 @@ def cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("event_type") == "signup", "I")
         .otherwise("U")
         .alias("op"),
-        F.concat_ws(":", "props", "event_type").alias("content"),
+    ]
+
+
+def _flagship_wal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``events`` as the flagship's full-row WAL: :func:`_flagship_keys`
+    plus content, commit and lang; deletes carry NULL content."""
+    wal = load(spark, sf_dir, "events").select(
+        *_flagship_keys(), F.concat_ws(":", "props", "event_type").alias("content"),
     ).withColumn("commit", F.md5("content")).withColumn("lang", F.lit("py"))
-    wal = wal.withColumn(
+    return wal.withColumn(
         "content", F.when(F.col("op") == "D", F.lit(None)).otherwise(F.col("content"))
     )
+
+
+@_q("cdc_replay_final_state", _CDC_REPLAY_ORACLE)
+def cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """THE engine, end-to-end, inside the correctness gate: derive a WAL
+    from `events`, replay it epoch-by-epoch through compaction + extraction
+    + MERGE into a HashMergeTable, return the final state. The oracle is
+    the independent latest-non-delete window query — the north_rule
+    convergence check on driver-shared data."""
+    wal = _flagship_wal(spark, sf_dir)
     # epoch size scales with the data so the flagship stays a bounded
     # number of commits (≤ ~16 epochs) at any sf instead of a driver-bound
     # loop of thousands of tiny epochs at 100×
@@ -389,20 +402,7 @@ def _two_phase_replay(spark: SparkSession, sf_dir: str, prefix: str):
     """Shared harness for the changelog-family queries: derive the WAL from
     `events` (flagship encoding), replay seq ∈ [0, mid] through the MERGE
     engine, snapshot, replay the rest. Returns (table, mid_snapshot)."""
-    ev = load(spark, sf_dir, "events")
-    wal = ev.select(
-        F.col("event_id").alias("seq"),
-        F.concat(F.lit("u"), (F.col("user_id") % 10).cast("string")).alias("repo"),
-        F.concat(F.lit("p"), F.col("user_id").cast("string")).alias("path"),
-        F.when(F.col("event_type") == "error", "D")
-        .when(F.col("event_type") == "signup", "I")
-        .otherwise("U")
-        .alias("op"),
-        F.concat_ws(":", "props", "event_type").alias("content"),
-    ).withColumn("commit", F.md5("content")).withColumn("lang", F.lit("py"))
-    wal = wal.withColumn(
-        "content", F.when(F.col("op") == "D", F.lit(None)).otherwise(F.col("content"))
-    )
+    wal = _flagship_wal(spark, sf_dir)
     n = int(wal.agg(F.max("seq")).first()[0] or 0)
     mid = n // 2
     tbl_path = _scratch_dir(prefix)
@@ -479,15 +479,8 @@ def cdc_partial_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
     from read_comp_data_pipeline_spark.operators.partial import partial_schema
 
-    ev = load(spark, sf_dir, "events")
-    wal = ev.select(
-        F.col("event_id").alias("seq"),
-        F.concat(F.lit("u"), (F.col("user_id") % 10).cast("string")).alias("repo"),
-        F.concat(F.lit("p"), F.col("user_id").cast("string")).alias("path"),
-        F.when(F.col("event_type") == "error", "D")
-        .when(F.col("event_type") == "signup", "I")
-        .otherwise("U")
-        .alias("op"),
+    wal = load(spark, sf_dir, "events").select(
+        *_flagship_keys(),
         F.when(F.col("event_id") % 3 == 0, F.concat(F.lit("T:"), F.col("props"))).alias("title"),
         F.when(F.col("event_id") % 2 == 0, F.concat_ws(":", "event_type", "props")).alias("text"),
     )

@@ -33,6 +33,7 @@ from read_comp_data_pipeline_spark.operators.merge import (
     HashMergeTable,
     atomic_write,
     bucket_expr,
+    same_content,
     shuffle_by_bucket,
 )
 from read_comp_data_pipeline_spark.schemas import TARGET_SCHEMA
@@ -259,17 +260,16 @@ def prebucket_for_merge(
 
 def bucket_before_extraction(
     df: DataFrame, n_buckets: int, mode: str, events: int, read_units: int,
-    min_events: int = PREBUCKET_MIN_EVENTS,
 ) -> tuple[DataFrame, bool]:
     """The one rule for where an epoch's bucket shuffle goes: before
     extraction (:func:`prebucket_for_merge`) when the scan is narrower than
     the cluster (``read_units < 2 × defaultParallelism``), after it
     otherwise. MOR's delta write pays the shuffle anyway, so on MOR it only
     moves; on COW the merge plan shuffles again, so a COW epoch moves it
-    only from ``min_events`` events up. Returns the compacted slice and
-    whether it was prebucketed."""
+    only from ``PREBUCKET_MIN_EVENTS`` events up. Returns the compacted
+    slice and whether it was prebucketed."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    if read_units >= 2 * par or (mode != "mor" and events < min_events):
+    if read_units >= 2 * par or (mode != "mor" and events < PREBUCKET_MIN_EVENTS):
         return df, False
     return prebucket_for_merge(df, n_buckets, par), True
 
@@ -304,7 +304,6 @@ def run_ingest(
     validator=None,
     max_attempts: int = 3,
     compact_threshold: int = 5_000_000,
-    prebucket_min_events: int = PREBUCKET_MIN_EVENTS,
     maintain_every: int | None = 50,
     keep_snapshots: int = 25,
     audit=None,
@@ -348,12 +347,6 @@ def run_ingest(
     epoch degrades to a heavier shuffle instead of OOMing the driver
     (operators/compact.py docstring; the count upper-bounds the key count).
 
-    ``prebucket_min_events``: a COW epoch whose scan is narrower than the
-    cluster moves its bucket shuffle before extraction only from this many
-    events up, because the COW merge shuffles again
-    (:func:`bucket_before_extraction`). A narrow MOR epoch always moves it:
-    its delta write needs no other shuffle.
-
     ``maintain_every``/``keep_snapshots``: automatic table maintenance —
     every ``maintain_every`` committed epochs the loop runs
     ``vacuum(keep_snapshots)`` (expire old snapshots + unreferenced data
@@ -393,7 +386,6 @@ def run_ingest(
             quarantine=quarantine, fail_after_epoch=fail_after_epoch,
             validator=validator, max_attempts=max_attempts,
             compact_threshold=compact_threshold,
-            prebucket_min_events=prebucket_min_events,
             maintain_every=maintain_every, keep_snapshots=keep_snapshots,
             audit=audit, audit_max_shrink=audit_max_shrink,
         )
@@ -408,15 +400,9 @@ def _run_epochs(
     spark, table, wal_path, table_path, hi_epoch, stats,
     *, extract, mode, compact_every, quarantine, fail_after_epoch,
     validator=None, max_attempts=3, compact_threshold=5_000_000,
-    prebucket_min_events=PREBUCKET_MIN_EVENTS, maintain_every=50, keep_snapshots=25,
-    audit=None, audit_max_shrink=None,
+    maintain_every=50, keep_snapshots=25, audit=None, audit_max_shrink=None,
 ) -> None:
-    staging = audit is not None or audit_max_shrink is not None
-    # 'before' carries across epochs: publish is a pointer swing, so this
-    # epoch's 'after' IS the next epoch's 'before' — on MOR that halves
-    # the audit cost (one reconciled count per epoch, not two)
-    audit_prev_rows: int | None = None
-
+    audit_base: dict = {}
     epochs = range(table.last_epoch + 1, hi_epoch + 1)
     # the tail epoch is fixed for the call: read its seq range once (lag)
     tail_hi = wal_src.epoch_stats(wal_path, hi_epoch)[1] if epochs else None
@@ -430,16 +416,6 @@ def _run_epochs(
         lo, hi, cnt, units = footers[:4]
         slice_df = wal_src.read_epoch(spark, wal_path, epoch, footers)
         lag = max(0, int(tail_hi) - int(hi)) if (tail_hi is not None and hi is not None) else 0
-        # size-based degradation guard: above the threshold the epoch's key
-        # set can't be assumed broadcastable — fall back to the shuffle agg.
-        # MOR gets the hash-semi variant (6× smaller broadcast, long-keyed
-        # build; collisions self-heal at read — compact.py docstring)
-        if cnt > compact_threshold:
-            strategy = "agg"
-        elif mode == "mor":
-            strategy = "broadcast_hash_semi"
-        else:
-            strategy = "broadcast_semi"
         quarantine_pre_commit = None
         if quarantine:
             # re-drive previously quarantined rows (attempt escalation:
@@ -497,99 +473,164 @@ def _run_epochs(
                             "overwrite"
                         ).partitionBy("status").parquet(qpath)
 
-        # transactional schema evolution BEFORE the wave that needs it
-        ensure_evolved(table, slice_df.schema)
-
-        # broadcast_semi compaction: only (key, seq) pairs shuffle; the
-        # content payload flows scan → semi-join filter → extraction →
-        # bucket write. Parallelism guard: an epoch whose file layout can't
-        # feed the cluster (few row groups) gets its bucket shuffle moved
-        # BEFORE the extraction so it runs at full width; on MOR that is
-        # still the epoch's one full-row shuffle.
-        compacted, do_prebucket = bucket_before_extraction(
-            compact_latest(slice_df, strategy=strategy), table.n_buckets, mode,
-            cnt, units, prebucket_min_events,
-        )
-        src = prepare_target_rows(compacted) if extract else compacted
-
-        # affected-bucket hint for COW (pruned key-columns-only scan): the
-        # MERGE is then a single Spark action per epoch — the
-        # extraction lineage runs once.
-        affected = None
-        if mode == "cow":
-            affected = [
-                int(r["_b"])
-                for r in slice_df.select(
-                    bucket_expr(table.n_buckets).alias("_b")
-                ).distinct().collect()
-            ]
-        res = table.merge(
-            src, epoch,
-            src_seq_lo=lo,
-            src_seq_hi=hi,
-            affected_buckets=affected,
+        res = apply_epoch(
+            table, slice_df, epoch, mode=mode, lo=lo, hi=hi, cnt=cnt, units=units,
             # with quarantine on, applied rows ≠ footer count (bad dropped,
             # retries added) — let the MERGE count its written files
             src_rows=None if quarantine else cnt,
-            lag_events=lag,
-            # same footer-derived gate as the compaction strategy: an epoch
-            # too large for the broadcast-semi compaction is also too large
-            # for the COW probe broadcast (the event count upper-bounds the
-            # key count) — the MERGE falls back to shuffled probe joins
-            src_keys_broadcastable=(cnt is None or cnt <= compact_threshold),
-            pre_commit=quarantine_pre_commit,
-            stage=staging,
+            lag=lag, pre_commit=quarantine_pre_commit, extract=extract,
+            compact_threshold=compact_threshold, compact_every=compact_every,
+            maintain_every=maintain_every, keep_snapshots=keep_snapshots,
+            audit=audit, audit_max_shrink=audit_max_shrink, audit_base=audit_base,
         )
-        res["compact_strategy"] = strategy
-        res["prebucketed"] = do_prebucket
-        if staging and not res.get("skipped"):
-            # WRITE-AUDIT-PUBLISH: the epoch landed on STAGING only —
-            # audit the staged state, publish on pass, discard and STOP
-            # on fail (a poisoned WAL needs intervention, not more epochs)
-            staged_snap = table.staged_snapshot()
-            reason = None
-            if audit_max_shrink is not None:
-                before = (
-                    audit_prev_rows
-                    if audit_prev_rows is not None
-                    else _snapshot_row_count(table, table._snapshot())
-                )
-                after = _snapshot_row_count(table, staged_snap)
-                if before > 0 and after < before * (1.0 - audit_max_shrink):
-                    reason = (
-                        f"staged row count shrank {before} -> {after} "
-                        f"(more than {audit_max_shrink:.0%} of the table)"
-                    )
-                else:
-                    audit_prev_rows = after
-            if reason is None and audit is not None:
-                if not audit(table.read(at_snapshot=staged_snap)):
-                    reason = "audit callable rejected the staged state"
-            if reason is not None:
-                table.discard_staged()
-                _record_audit_rejection(table_path, epoch, reason)
-                stats.rejected_epoch = epoch
-                stats.reject_reason = reason
-                return
-            table.publish_staged()
+        if "rejected" in res:
+            # a poisoned WAL needs intervention, not more epochs
+            stats.rejected_epoch = epoch
+            stats.reject_reason = res["rejected"]
+            return
         if res.get("skipped"):
             stats.epochs_skipped += 1
         else:
             stats.epochs_applied += 1
             stats.events_applied += res["rows_applied"]
             stats.per_epoch.append(res)
-            if mode == "mor" and compact_every and (epoch + 1) % compact_every == 0:
-                table.compact_table()
-            # automatic maintenance cadence: expire snapshots + fold
-            # side-table files so snapshots/ and manifest/metrics stay
-            # bounded over a 10^5-epoch run (off the per-epoch hot path;
-            # sidecar folding is generational so the cadence is
-            # amortized-linear — merge.compact_sidecars docstring)
-            if maintain_every and (epoch + 1) % maintain_every == 0:
-                table.vacuum(keep_snapshots=keep_snapshots)
-                table.compact_sidecars()
         if fail_after_epoch is not None and epoch >= fail_after_epoch:
             raise RuntimeError(f"injected failure after epoch {epoch}")
+
+
+def apply_epoch(
+    table: HashMergeTable, slice_df: DataFrame, epoch: int, *,
+    mode: str, lo: int, hi: int, cnt: int, units: int, src_rows: int | None,
+    lag: int = 0, pre_commit=None, extract: bool = True,
+    compact_threshold: int = 5_000_000, compact_every: int = 10,
+    maintain_every: int | None = 50, keep_snapshots: int = 25,
+    audit=None, audit_max_shrink: float | None = None, audit_base: dict | None = None,
+) -> dict:
+    """Apply one WAL slice as epoch ``epoch``: compaction → extraction →
+    MERGE → audit gate → maintenance cadence. The batch loop
+    (:func:`run_ingest`) and the Structured Streaming loop
+    (``stream.stream_ingest``) both apply their epochs here.
+
+    ``lo``/``hi``/``cnt`` are the slice's seq range and event count,
+    ``units`` its scan width (row groups, or a cached micro-batch's
+    partitions); ``src_rows`` is the MERGE's applied-row count, or None to
+    count the written files. The other keywords are :func:`run_ingest`'s.
+    ``audit_base`` is the caller's dict that carries the audit's row count
+    from one epoch to the next.
+
+    Returns the MERGE's stats dict plus ``compact_strategy`` and
+    ``prebucketed``; a rejected epoch is discarded, recorded under
+    ``{table}/audits/`` and returned with ``rejected`` set to the reason.
+    """
+    # size-based degradation guard: above the threshold the epoch's key
+    # set can't be assumed broadcastable — fall back to the shuffle agg.
+    # MOR gets the hash-semi variant (6× smaller broadcast, long-keyed
+    # build; collisions self-heal at read — compact.py docstring)
+    if cnt > compact_threshold:
+        strategy = "agg"
+    elif mode == "mor":
+        strategy = "broadcast_hash_semi"
+    else:
+        strategy = "broadcast_semi"
+
+    # transactional schema evolution BEFORE the wave that needs it
+    ensure_evolved(table, slice_df.schema)
+
+    # broadcast_semi compaction: only (key, seq) pairs shuffle; the
+    # content payload flows scan → semi-join filter → extraction →
+    # bucket write. Parallelism guard: an epoch whose file layout can't
+    # feed the cluster (few row groups) gets its bucket shuffle moved
+    # BEFORE the extraction so it runs at full width; on MOR that is
+    # still the epoch's one full-row shuffle.
+    n_buckets = table.n_buckets
+    compacted, prebucketed = bucket_before_extraction(
+        compact_latest(slice_df, strategy=strategy), n_buckets, mode, cnt, units,
+    )
+    src = prepare_target_rows(compacted) if extract else compacted
+
+    # affected-bucket hint for COW (pruned key-columns-only scan): the
+    # MERGE is then a single Spark action per epoch — the
+    # extraction lineage runs once.
+    affected = None
+    if mode == "cow":
+        affected = [
+            int(r["_b"])
+            for r in slice_df.select(bucket_expr(n_buckets).alias("_b")).distinct().collect()
+        ]
+    staging = audit is not None or audit_max_shrink is not None
+    res = table.merge(
+        src, epoch,
+        src_seq_lo=lo,
+        src_seq_hi=hi,
+        affected_buckets=affected,
+        src_rows=src_rows,
+        lag_events=lag,
+        # same gate as the compaction strategy: an epoch too large for the
+        # broadcast-semi compaction is also too large for the COW probe
+        # broadcast (the event count upper-bounds the key count) — the
+        # MERGE falls back to shuffled probe joins
+        src_keys_broadcastable=strategy != "agg",
+        pre_commit=pre_commit,
+        stage=staging,
+    )
+    res["compact_strategy"] = strategy
+    res["prebucketed"] = prebucketed
+    if res.get("skipped"):
+        return res
+    if staging:
+        # WRITE-AUDIT-PUBLISH: the epoch landed on STAGING only — audit
+        # the staged state, publish on pass, discard on fail
+        reason = _audit_staged(table, audit, audit_max_shrink, audit_base)
+        if reason is not None:
+            table.discard_staged()
+            _record_audit_rejection(table.path, epoch, reason)
+            res["rejected"] = reason
+            return res
+        table.publish_staged()
+    if mode == "mor" and compact_every and (epoch + 1) % compact_every == 0:
+        table.compact_table()
+    # automatic maintenance cadence: expire snapshots + fold side-table
+    # files so snapshots/ and manifest/metrics stay bounded over a
+    # 10^5-epoch run (off the per-epoch hot path; sidecar folding is
+    # generational so the cadence is amortized-linear —
+    # merge.compact_sidecars docstring)
+    if maintain_every and (epoch + 1) % maintain_every == 0:
+        table.vacuum(keep_snapshots=keep_snapshots)
+        table.compact_sidecars()
+    return res
+
+
+def _audit_staged(table, audit, audit_max_shrink, base: dict | None) -> str | None:
+    """The staged epoch's rejection reason, or None if it passes. ``base``
+    holds the last passing epoch's staged snapshot and row count: publish
+    is a pointer swing, so that count is this epoch's 'before' while the
+    current snapshot still has the same content (:func:`merge.same_content`
+    — compaction and vacuum keep it, a ``delete_where`` or another
+    writer's epoch does not); otherwise 'before' is counted again. On MOR
+    that reuse halves the audit cost."""
+    staged = table.staged_snapshot()
+    if audit_max_shrink is not None:
+        base = {} if base is None else base
+        before = _audit_before(table, base)
+        after = _snapshot_row_count(table, staged)
+        if before > 0 and after < before * (1.0 - audit_max_shrink):
+            return (
+                f"staged row count shrank {before} -> {after} "
+                f"(more than {audit_max_shrink:.0%} of the table)"
+            )
+        base.update(snap=staged, rows=after)
+    if audit is not None and not audit(table.read(at_snapshot=staged)):
+        return "audit callable rejected the staged state"
+    return None
+
+
+def _audit_before(table, base: dict) -> int:
+    """The current snapshot's row count: ``base['rows']`` while its content
+    equals ``base['snap']``'s, a fresh count otherwise."""
+    cur = table._snapshot()
+    if base and same_content(base["snap"], cur):
+        return base["rows"]
+    return _snapshot_row_count(table, cur)
 
 
 def _record_audit_rejection(table_path: str, epoch: int, reason: str) -> None:

@@ -1,10 +1,15 @@
 """Structured Streaming ingest variant.
 
 The batch epoch loop (``ingest.py``) is the deterministic, replayable
-form; this module runs the same transform through Spark Structured
-Streaming — ``readStream`` over the WAL directory → ``foreachBatch`` →
-the same compaction/extraction/MERGE — with ``Trigger.AvailableNow`` for
-bounded runs.
+form; this module runs the same epochs through Spark Structured
+Streaming: ``readStream`` over the WAL directory → ``foreachBatch`` →
+``ingest.apply_epoch``, the batch loop's own compaction, extraction,
+MERGE, audit gate and compaction/maintenance cadence, with
+``Trigger.AvailableNow`` for bounded runs. The stream keeps only what a
+micro-batch source needs for itself: the batch's seq range and count
+(from the persisted batch, not from parquet footers), the replay skip
+below, and raising on an audit rejection so the query stops with its
+offset uncommitted.
 
 Exactly-once is keyed on SOURCE data, not on the streaming batch id.
 Batch ids are not a safe idempotency key — after a checkpoint-directory
@@ -28,14 +33,40 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from read_comp_data_pipeline_spark.operators.compact import compact_latest
 from read_comp_data_pipeline_spark.operators.merge import HashMergeTable
 from read_comp_data_pipeline_spark.schemas import TARGET_SCHEMA, WAL_SCHEMA
-from read_comp_data_pipeline_spark.streaming.evolve import ensure_evolved
-from read_comp_data_pipeline_spark.streaming.ingest import (
-    bucket_before_extraction,
-    prepare_target_rows,
-)
+from read_comp_data_pipeline_spark.streaming.ingest import apply_epoch
+
+
+def _run_stream(stream: DataFrame, checkpoint_path: str, table: HashMergeTable, apply) -> None:
+    """Drive ``stream`` to its end (AvailableNow), calling
+    ``apply(batch_df, batch_id, lo, hi, n)`` for each micro-batch that
+    holds rows above the table's ``seq_hi`` watermark. A batch entirely at
+    or below it is a pure replay of committed data (a monotone WAL tail
+    never delivers an unseen gap below the watermark) and is skipped
+    without merge cost. There is no row-level filter against the
+    watermark: the MERGE is per-key seq-aware, so a mixed batch (replayed
+    prefix + new suffix after checkpoint loss) applies the new rows and
+    no-ops the replayed ones."""
+
+    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # the batch feeds several consumers (seq stats, compaction, the
+        # MERGE) — persist so the file scan runs once
+        batch_df = batch_df.persist()
+        try:
+            lo, hi, n = batch_df.agg(F.min("seq"), F.max("seq"), F.count("*")).first()
+            if n and hi > table.last_seq_hi:
+                apply(batch_df, batch_id, int(lo), int(hi), int(n))
+        finally:
+            batch_df.unpersist()
+
+    (
+        stream.writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", os.path.join(checkpoint_path, "cp"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def stream_ingest(
@@ -50,16 +81,16 @@ def stream_ingest(
     audit_max_shrink: float | None = None,
 ) -> None:
     """Run the WAL through Structured Streaming until no data remains
-    (AvailableNow), applying each micro-batch as one MERGE epoch.
+    (AvailableNow), applying each micro-batch as one epoch through
+    ``ingest.apply_epoch`` — MOR tables compact and all tables are
+    maintained on ``run_ingest``'s default cadence.
 
-    ``audit_max_shrink`` is the streaming arm of the batch loop's
-    write-audit-publish gate (``ingest.run_ingest``): each micro-batch
-    stages, the staged row count is checked against the shrink bound,
-    and a poisoned batch is DISCARDED (readers never saw it) with the
-    stream stopped by raising — foreachBatch exceptions fail the query,
-    which is the correct behavior for a mass-delete upstream bug: the
-    checkpoint has not advanced past the rejected batch, so a restart
-    after the fix re-delivers it."""
+    ``audit_max_shrink`` is the batch loop's write-audit-publish shrink
+    gate: each micro-batch stages, and a poisoned batch is DISCARDED
+    (readers never saw it) with the stream stopped by raising —
+    foreachBatch exceptions fail the query, which is the correct behavior
+    for a mass-delete upstream bug: the checkpoint has not advanced past
+    the rejected batch, so a restart after the fix re-delivers it."""
     if not HashMergeTable.exists(table_path):
         HashMergeTable.create(spark, table_path, TARGET_SCHEMA, n_buckets=n_buckets, mode=mode)
     table = HashMergeTable(spark, table_path)
@@ -67,99 +98,23 @@ def stream_ingest(
     reader = spark.readStream.schema(WAL_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(wal_path)
+    # the audit's 'before' count carries across micro-batches
+    audit_base: dict = {}
 
-    # the audit's 'before' count carries across micro-batches (publish is a
-    # pointer swing, so batch N's staged 'after' IS batch N+1's 'before') —
-    # mirrors _run_epochs' audit_prev_rows: on MOR tables a fresh 'before'
-    # would otherwise cost a full reconciled table count per batch, scaling
-    # audit cost with table size instead of batch size
-    audit_prev_rows: list[int | None] = [None]
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the batch feeds three consumers (seq stats, compaction, MERGE) —
-        # persist so the file scan runs once
-        batch_df = batch_df.persist()
-        try:
-            lo, hi, n = batch_df.agg(
-                F.min("seq"), F.max("seq"), F.count("*")
-            ).first()
-            if not n:
-                return
-            committed = table.last_seq_hi
-            if hi <= committed:
-                # pure replay of already-committed data (a monotone WAL tail
-                # never delivers an unseen gap below the watermark) — skip
-                # the merge cost entirely
-                return
-            ensure_evolved(table, batch_df.schema)
-            # same size-based degradation guard as the batch loop: a batch
-            # whose key set can't be assumed broadcastable takes the
-            # shuffle-agg compaction instead of the broadcast-semi plan
-            if n > compact_threshold:
-                strategy = "agg"
-            elif mode == "mor":
-                strategy = "broadcast_hash_semi"  # self-heals at read
-            else:
-                strategy = "broadcast_semi"
-            # no row-level filtering against the watermark: the MERGE is
-            # per-key seq-aware (operators/merge.py), so a mixed batch
-            # (replayed prefix + new suffix after checkpoint loss) applies
-            # the new rows and no-ops the replayed ones
-            # the batch loop's rule for where the bucket shuffle goes: the
-            # cached batch's partitions are its scan width
-            compacted, _ = bucket_before_extraction(
-                compact_latest(batch_df, strategy=strategy), table.n_buckets,
-                mode, n, batch_df.rdd.getNumPartitions(),
+    def apply(batch_df: DataFrame, batch_id: int, lo: int, hi: int, n: int) -> None:
+        # the cached batch's partitions are its scan width
+        res = apply_epoch(
+            table, batch_df, table.last_epoch + 1, mode=mode, lo=lo, hi=hi,
+            cnt=n, units=batch_df.rdd.getNumPartitions(), src_rows=n,
+            compact_threshold=compact_threshold,
+            audit_max_shrink=audit_max_shrink, audit_base=audit_base,
+        )
+        if "rejected" in res:
+            raise RuntimeError(
+                f"audit rejected streaming batch {batch_id}: {res['rejected']}"
             )
-            src = prepare_target_rows(compacted)
-            staging = audit_max_shrink is not None
-            table.merge(
-                src,
-                table.last_epoch + 1,
-                src_seq_lo=int(lo),
-                src_seq_hi=int(hi),
-                stage=staging,
-            )
-            if staging:
-                from read_comp_data_pipeline_spark.streaming.ingest import (
-                    _snapshot_row_count,
-                )
 
-                staged_snap = table.staged_snapshot()
-                before = (
-                    audit_prev_rows[0]
-                    if audit_prev_rows[0] is not None
-                    else _snapshot_row_count(table, table._snapshot())
-                )
-                after = _snapshot_row_count(table, staged_snap)
-                if before > 0 and after < before * (1.0 - audit_max_shrink):
-                    table.discard_staged()
-                    from read_comp_data_pipeline_spark.streaming.ingest import (
-                        _record_audit_rejection,
-                    )
-
-                    reason = (
-                        f"audit rejected streaming batch {batch_id}: staged "
-                        f"row count shrank {before} -> {after} (more than "
-                        f"{audit_max_shrink:.0%} of the table)"
-                    )
-                    _record_audit_rejection(
-                        table_path, int(staged_snap["epoch"]), reason
-                    )
-                    raise RuntimeError(reason)
-                audit_prev_rows[0] = after
-                table.publish_staged()
-        finally:
-            batch_df.unpersist()
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", os.path.join(checkpoint_path, "cp"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_stream(reader.parquet(wal_path), checkpoint_path, table, apply)
 
 
 def stream_ingest_partial(
@@ -204,31 +159,19 @@ def stream_ingest_partial(
             n_buckets=n_buckets, key_cols=key_cols, mode="cow",
         )
     table = HashMergeTable(spark, table_path)
-    stream = spark.readStream.schema(event_schema).parquet(wal_path)
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            lo, hi, n = batch_df.agg(F.min("seq"), F.max("seq"), F.count("*")).first()
-            if not n or hi <= table.last_seq_hi:
-                return
-            table.merge_partial(
-                batch_df, table.last_epoch + 1, value_cols,
-                src_seq_lo=int(lo), src_seq_hi=int(hi),
-                # same size-based degradation guard as the batch loops: a
-                # batch whose key set can't be assumed broadcastable takes
-                # shuffled probe joins instead of a driver-built broadcast
-                folded_broadcastable=(n <= compact_threshold),
-                # batch size already counted above → fold auto-switch
-                src_rows=int(n),
-            )
-        finally:
-            batch_df.unpersist()
+    def apply(batch_df: DataFrame, batch_id: int, lo: int, hi: int, n: int) -> None:
+        table.merge_partial(
+            batch_df, table.last_epoch + 1, value_cols,
+            src_seq_lo=lo, src_seq_hi=hi,
+            # same size-based degradation guard as the batch loops: a
+            # batch whose key set can't be assumed broadcastable takes
+            # shuffled probe joins instead of a driver-built broadcast
+            folded_broadcastable=(n <= compact_threshold),
+            # batch size already counted → fold auto-switch
+            src_rows=n,
+        )
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", os.path.join(checkpoint_path, "cp"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _run_stream(
+        spark.readStream.schema(event_schema).parquet(wal_path), checkpoint_path, table, apply
     )

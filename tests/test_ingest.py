@@ -477,42 +477,23 @@ def test_auto_maintenance_bounds_files_and_keeps_time_travel(spark, tmp_path):
     assert _state_digest(t.read()) == _state_digest(_final_expected(spark, wal))
 
 
-def test_iceberg_merge_statement_parses_with_all_arms(spark):
-    """The deployment arm: merge_sql_for_iceberg keeps the cluster MERGE
-    statement in sync with the sandbox implementation by construction —
-    this parse-smoke (Spark's own SQL parser; no Iceberg jar needed) stops
-    it drifting into syntax no engine would accept, and pins all three
-    seq-guarded arms."""
-    from read_comp_data_pipeline_spark.operators.merge import merge_sql_for_iceberg
-
-    sql = merge_sql_for_iceberg("cat.db.target", "src_view")
-    plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-    assert plan.getClass().getSimpleName() == "MergeIntoTable"
-    s = plan.toString().lower()
-    assert "deleteaction" in s          # WHEN MATCHED ... op = 'D' THEN DELETE
-    assert "updatestaraction" in s      # WHEN MATCHED ... THEN UPDATE SET *
-    assert "insertstaraction" in s      # WHEN NOT MATCHED ... THEN INSERT *
-    # both matched arms carry the seq guard (row-level idempotency)
-    assert s.count("'s.seq > 't.seq") == 2
-
-
 def test_prebucketed_ingest_converges_and_bounds_files(spark, wal_path, tmp_path):
     """The pre-extraction bucket+salt shuffle (extraction-parallelism
     guard) must produce the identical final state, and MOR delta dirs
     must hold a bounded <= n_salts files per bucket (no small-files
-    explosion). A one-file MOR epoch prebuckets at the default
-    ``prebucket_min_events``; a one-file COW epoch of that size does not."""
+    explosion). A one-file MOR epoch prebuckets; a one-file COW epoch of
+    that size does not (below ``PREBUCKET_MIN_EVENTS``)."""
     import math
     import os
 
     from read_comp_data_pipeline_spark.sources.wal import epoch_footers
 
     tbl = str(tmp_path / "t")
-    forced = run_ingest(spark, wal_path, tbl, n_buckets=4, mode="mor", max_epoch=2,
-                        compact_every=100, prebucket_min_events=0)
+    first = run_ingest(spark, wal_path, tbl, n_buckets=4, mode="mor", max_epoch=2,
+                       compact_every=100)
     default = run_ingest(spark, wal_path, tbl, n_buckets=4, mode="mor",
                          compact_every=100)
-    epochs = forced.per_epoch + default.per_epoch
+    epochs = first.per_epoch + default.per_epoch
     assert default.per_epoch and all(e["prebucketed"] for e in epochs)
     assert epoch_footers(wal_path, default.per_epoch[0]["epoch"]).n_read_units == 1
     expected = _final_expected(spark, wal_path)

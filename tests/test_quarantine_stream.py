@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from read_comp_data_pipeline_spark.operators.merge import HashMergeTable
@@ -74,18 +75,19 @@ def test_quarantine_bad_rows(spark, tmp_path):
     assert subdirs <= {"status=pending", "status=dead"}
 
 
-def test_stream_ingest_matches_batch(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_stream_ingest_matches_batch(spark, tmp_path, mode):
     wal_path = str(tmp_path / "wal")
     write_wal(
         generate_change_events(spark, 1500, n_keys=150, epoch_size=500), wal_path
     )
     batch_tbl = str(tmp_path / "batch")
-    run_ingest(spark, wal_path, batch_tbl, n_buckets=4, mode="mor")
+    run_ingest(spark, wal_path, batch_tbl, n_buckets=4, mode=mode)
 
     stream_tbl = str(tmp_path / "stream")
     stream_ingest(
         spark, wal_path, stream_tbl, checkpoint_path=str(tmp_path / "ckpt"),
-        n_buckets=4, mode="mor", max_files_per_trigger=4,
+        n_buckets=4, mode=mode, max_files_per_trigger=4,
     )
     a = HashMergeTable(spark, batch_tbl).read()
     b = HashMergeTable(spark, stream_tbl).read()
@@ -107,9 +109,97 @@ def test_stream_ingest_matches_batch(spark, tmp_path):
     v_before = HashMergeTable(spark, stream_tbl)._snapshot()["version"]
     stream_ingest(
         spark, wal_path, stream_tbl, checkpoint_path=str(tmp_path / "ckpt"),
-        n_buckets=4, mode="mor",
+        n_buckets=4, mode=mode,
     )
     assert HashMergeTable(spark, stream_tbl)._snapshot()["version"] == v_before
+
+
+def _write_wal_in_order(df, path):
+    """One file per epoch, written epoch by epoch: the file source delivers
+    files in modification-time order, so micro-batches arrive in seq order
+    (the monotone-tail contract the stream's replay skip relies on)."""
+    import time
+
+    for e in sorted(r["epoch"] for r in df.select("epoch").distinct().collect()):
+        df.where(F.col("epoch") == e).coalesce(1).write.mode("append").partitionBy(
+            "epoch"
+        ).parquet(path)
+        time.sleep(0.02)
+
+
+def _assert_matches_oracle(spark, table_path, wal_path):
+    final = HashMergeTable(spark, table_path).read()
+    expected = expected_final_state(spark.read.parquet(wal_path))
+    assert final.count() == expected.count()
+    j = final.select("repo", "path", "content_sha").join(
+        expected.select(
+            "repo", "path", F.sha2(F.encode("content", "utf-8"), 256).alias("exp_sha")
+        ),
+        on=["repo", "path"],
+        how="full_outer",
+    )
+    assert j.where(
+        F.col("content_sha").isNull()
+        | F.col("exp_sha").isNull()
+        | (F.col("content_sha") != F.col("exp_sha"))
+    ).count() == 0
+
+
+def test_stream_cow_above_compact_threshold_takes_agg_and_shuffled_probes(
+    spark, tmp_path, monkeypatch
+):
+    """A streamed COW batch larger than ``compact_threshold`` compacts with
+    the broadcast-free ``agg`` plan and tells the MERGE its key set is not
+    broadcastable (shuffled probe joins) — the batch loop's guard — and
+    still converges to the oracle."""
+    from read_comp_data_pipeline_spark.streaming import ingest
+
+    seen = {"strategy": [], "broadcastable": []}
+    real_compact, real_merge = ingest.compact_latest, HashMergeTable.merge
+
+    def compact_spy(df, strategy="broadcast_semi", **kw):
+        seen["strategy"].append(strategy)
+        return real_compact(df, strategy=strategy, **kw)
+
+    def merge_spy(self, *a, **kw):
+        seen["broadcastable"].append(kw.get("src_keys_broadcastable"))
+        return real_merge(self, *a, **kw)
+
+    monkeypatch.setattr(ingest, "compact_latest", compact_spy)
+    monkeypatch.setattr(HashMergeTable, "merge", merge_spy)
+
+    wal_path = str(tmp_path / "wal")
+    _write_wal_in_order(
+        generate_change_events(spark, 900, n_keys=90, epoch_size=300), wal_path
+    )
+    tbl = str(tmp_path / "t")
+    stream_ingest(
+        spark, wal_path, tbl, checkpoint_path=str(tmp_path / "ckpt"),
+        n_buckets=4, mode="cow", max_files_per_trigger=1, compact_threshold=100,
+    )
+    assert seen["strategy"] == ["agg"] * 3
+    assert seen["broadcastable"] == [False] * 3
+    _assert_matches_oracle(spark, tbl, wal_path)
+
+
+def test_stream_mor_compacts_on_the_batch_cadence(spark, tmp_path):
+    """Streamed MOR epochs fold their deltas into the base on
+    ``run_ingest``'s default cadence (every 10th epoch), so a long stream
+    does not grow deltas without bound."""
+    wal_path = str(tmp_path / "wal")
+    _write_wal_in_order(
+        generate_change_events(spark, 1100, n_keys=100, epoch_size=100), wal_path
+    )
+    tbl = str(tmp_path / "t")
+    stream_ingest(
+        spark, wal_path, tbl, checkpoint_path=str(tmp_path / "ckpt"),
+        n_buckets=4, mode="mor", max_files_per_trigger=1,
+    )
+    snap = HashMergeTable(spark, tbl)._snapshot()
+    assert snap["epoch"] == 10
+    # epochs 0-9 were folded after epoch 9; only epoch 10's delta remains
+    assert [d["epoch"] for d in snap["deltas"]] == [10]
+    _assert_matches_oracle(spark, tbl, wal_path)
 
 
 def test_quarantine_retry_escalation(spark, tmp_path):
@@ -247,21 +337,7 @@ def test_stream_checkpoint_loss_is_lossless(spark, tmp_path):
     df.where(F.col("epoch") == 2).write.mode("append").partitionBy("epoch").parquet(wal_path)
     stream_ingest(spark, wal_path, tbl, checkpoint_path=ckpt, n_buckets=4, mode="mor")
 
-    final = HashMergeTable(spark, tbl).read()
-    expected = expected_final_state(spark.read.parquet(wal_path))
-    assert final.count() == expected.count()
-    j = final.select("repo", "path", "content_sha").join(
-        expected.select(
-            "repo", "path", F.sha2(F.encode("content", "utf-8"), 256).alias("exp_sha")
-        ),
-        on=["repo", "path"],
-        how="full_outer",
-    )
-    assert j.where(
-        F.col("content_sha").isNull()
-        | F.col("exp_sha").isNull()
-        | (F.col("content_sha") != F.col("exp_sha"))
-    ).count() == 0
+    _assert_matches_oracle(spark, tbl, wal_path)
 
 
 def test_clean_epoch_writes_no_quarantine_dir(spark, tmp_path):

@@ -232,3 +232,29 @@ def test_crashed_publish_self_heals_instead_of_bricking(table, spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="no staged snapshot"):
         table.discard_staged()
+
+
+def test_audit_baseline_recounts_only_after_a_content_change(spark, tmp_path):
+    """The shrink gate reuses the last published 'after' count as the next
+    'before' only while the table still holds that content
+    (``merge.same_content``): a ``delete_where`` forces a recount;
+    ``compact_table`` and ``vacuum`` rewrite layout only and do not."""
+    from read_comp_data_pipeline_spark.streaming.ingest import _audit_before
+
+    t = HashMergeTable.create(spark, str(tmp_path / "t"), SCHEMA, n_buckets=2, mode="mor")
+    t.merge(_src(spark, [("r", "a", "a0", 0, "I"), ("r", "b", "b0", 1, "I")]), epoch=0)
+    t.merge(_src(spark, [("r", "c", "c0", 2, "I")]), epoch=1)
+    # a sentinel count: the real one is 3, so a recount is visible
+    base = {"snap": t._snapshot(), "rows": 99}
+    assert _audit_before(t, base) == 99
+    t.delete_where("path = 'a'")
+    assert _audit_before(t, base) == 2
+
+    t.merge(_src(spark, [("r", "d", "d0", 3, "I")]), epoch=2)
+    base = {"snap": t._snapshot(), "rows": 99}
+    v = t._snapshot()["version"]
+    assert not t.compact_table()["skipped"]
+    t.vacuum(keep_snapshots=1)
+    assert t._snapshot()["version"] > v
+    assert _audit_before(t, base) == 99
+    assert _audit_before(t, {}) == 3
