@@ -8,14 +8,15 @@ metadata-extraction pipeline) as an idiomatic Spark engine:
   (``sources.wal``),
 * the seen-set becomes the key set of a MERGE target table
   (``operators.merge.HashMergeTable``),
-* per-page extraction becomes Arrow-vectorized pandas UDFs over content
-  batches (``functions.extract``),
+* per-page extraction becomes Column expressions; ``scan_first_section``
+  is the Python reference they are tested against (``functions.extract``),
 * the hourly checkpoint becomes an idempotent per-(partition, epoch)
   commit manifest (exactly-once resume; ``streaming.ingest``).
 
-Everything is DataFrame/Catalyst-first: Column expressions wherever
-expressible, pandas UDFs only for genuinely imperative per-document parsing,
-no per-row Python UDFs anywhere, no ``collect()`` in any data path.
+Everything is DataFrame/Catalyst-first: Column expressions on the ingest
+path; pandas UDFs only in queries that parse a whole document imperatively
+(the multi-section scan, HTML metadata); no per-row Python UDFs anywhere,
+no ``collect()`` in any data path.
 """
 
 __version__ = "0.1.0"

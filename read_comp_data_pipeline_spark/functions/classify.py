@@ -27,13 +27,6 @@ TERMS_BFS = TERMS_DFS + ["tribunal"]
 DEFAULT_THRESHOLD = 2  # search_scrape.py:385, :1106
 
 
-def keyword_flags(content: Column, terms: list[str] | None = None) -> Column:
-    """array<boolean> of per-term lowercase containment checks."""
-    terms = terms or TERMS_BFS
-    low = F.lower(content)
-    return F.array(*[low.contains(t) for t in terms])
-
-
 def keyword_hits(content: Column, terms: list[str] | None = None) -> Column:
     """Number of matching terms — the reference's ``sum([bool, ...])``
     (A1/F14).

@@ -1,5 +1,7 @@
 """Content extraction: the header-breadcrumb scanner (W1) and metadata
-fallback chains (F10) as Arrow-vectorized pandas UDFs.
+fallback chains (F10). The ingest path's lead section is Column expressions
+(:func:`first_section_exprs`); :func:`scan_first_section` is the Python
+reference they are tested against.
 
 Behavioral port (NOT a code port) of the reference's stateful ordered scan
 ``/root/reference/search_scrape.py:434-620`` (DFS copy) /
@@ -129,21 +131,13 @@ def scan_first_section(title: str | None, content: str | None) -> tuple[str | No
     return (header, " ".join(desc_parts).strip())
 
 
-@pandas_udf(SECTION_SCHEMA)
-def first_section_udf(title: pd.Series, content: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame(
-        [scan_first_section(t, c) for t, c in zip(title, content)],
-        columns=["heading", "text"],
-    )
-
-
 def first_section_exprs(title: Column, content: Column) -> tuple[Column, Column]:
     """:func:`scan_first_section` as pure JVM Column expressions — the
     ingest hot path's extraction with ZERO JVM↔Python boundary (guide §4:
-    built-ins beat any UDF; the pandas variant shipped every epoch's full
-    content through Arrow both ways and looped rows in Python).
+    built-ins beat any UDF; a pandas UDF would ship every epoch's full
+    content through Arrow both ways and loop rows in Python).
 
-    Equivalence argument (property-tested against the pandas UDF):
+    Equivalence argument (property-tested against ``scan_first_section``):
 
     * ``scan_first_section`` never updates ``header`` before its first
       return, so heading ≡ ``title or ""`` (null only for null content);

@@ -1,6 +1,7 @@
-"""URL predicates & normalizers (SURVEY §2.2 P1-P4) — single Column
+"""URL predicates & normalizers (SURVEY §2.2 P1, P3, P4) — single Column
 expressions so Catalyst folds them into one codegen'd predicate and pushes
-them into scans.
+them into scans. P2 (namespace pages) is disabled in the reference and not
+ported.
 """
 
 from __future__ import annotations
@@ -32,15 +33,6 @@ def url_accept(url: Column) -> Column:
     return cond
 
 
-def is_namespace_page(url: Column) -> Column:
-    """P2 — ':' in the first path token after /wiki/
-    (search_scrape.py:68-82). NOTE: defined but DISABLED in the reference
-    (commented out of both predicates at :96 and :121); kept here with the
-    same status — available, not wired into url_accept."""
-    token = F.substring_index(F.substring_index(url, "/wiki/", -1), "/", 1)
-    return token.contains(":")
-
-
 def strip_fragment(url: Column) -> Column:
     """P3 — drop '#...' suffix (search_scrape.py:56-65)."""
     return F.substring_index(url, "#", 1)
@@ -49,13 +41,3 @@ def strip_fragment(url: Column) -> Column:
 def absolutize(href: Column, base: str = WIKI_BASE) -> Column:
     """P4 — prefix the base onto root-relative hrefs (search_scrape.py:23-28)."""
     return F.when(href.startswith("/"), F.concat(F.lit(base), href)).otherwise(href)
-
-
-def title_to_filename(title: Column) -> Column:
-    """S6 filename mangle: ' '→'_', '/'→'-' (search_scrape.py:418, :1141)."""
-    return F.translate(title, " /", "_-")
-
-
-def filename_to_title(fname: Column) -> Column:
-    """J3 inverse transform: strip .txt, '_'→' ' (query_gpt.py:38-39)."""
-    return F.regexp_replace(F.regexp_replace(fname, r"\.txt$", ""), "_", " ")

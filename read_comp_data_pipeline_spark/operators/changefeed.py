@@ -41,7 +41,11 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from read_comp_data_pipeline_spark.operators.merge import atomic_write, same_content
+from read_comp_data_pipeline_spark.operators.merge import (
+    atomic_write,
+    parquet_rows,
+    same_content,
+)
 
 _CURSOR = "CURSOR"
 
@@ -242,7 +246,7 @@ def follow_changes(
         .withColumn("_to_epoch", F.lit(to_epoch).cast("long"))
         .write.mode("overwrite").parquet(win_dir)
     )
-    n = spark.read.parquet(win_dir).count()
+    n = parquet_rows(win_dir)
     _write_cursor(out_path, {
         "epoch": to_epoch,
         "version": int(src_snap["version"]),

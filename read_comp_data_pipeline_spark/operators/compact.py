@@ -1,4 +1,4 @@
-"""Per-key last-writer-wins compaction (SURVEY.md §2.4 A5) + skew helpers.
+"""Per-key last-writer-wins compaction (SURVEY.md §2.4 A5).
 
 The reference enforces "exactly one state per key" with a seen-set that
 keeps the *first* occurrence (``/root/reference/search_scrape.py:336-337,
@@ -13,10 +13,6 @@ each map task pre-combines its events to ≤1 row per key before the
 shuffle, so a key with 10^7 updates contributes at most #map-partitions
 rows to the exchange. That *is* the salting — done by the engine for free.
 Verify in the plan: HashAggregate(partial) → Exchange → HashAggregate(final).
-
-An explicit two-phase salted variant is provided for operators that lack
-partial aggregation (and to satisfy the north_rule's explicit-salting
-requirement end-to-end); both produce identical results.
 """
 
 from __future__ import annotations
@@ -93,45 +89,3 @@ def compact_latest(
     latest_row, unpacked = _COLUMNS.get(("agg", key_cols, order_col, payload), agg_cols)
     out = df.groupBy(*key_cols).agg(latest_row)
     return out.select(*key_cols, *unpacked)
-
-
-def compact_latest_salted(
-    df: DataFrame,
-    key_cols: list[str] | None = None,
-    order_col: str = "seq",
-    n_salts: int = 16,
-) -> DataFrame:
-    """Explicit two-phase salted last-writer-wins.
-
-    Phase 1 groups by (key, salt) — a hot key fans out across ``n_salts``
-    reducers; phase 2 reduces the ≤``n_salts`` survivors per key. Use when
-    the per-group reduction is not map-side combinable (custom UDAFs);
-    for plain ``max_by`` prefer :func:`compact_latest`.
-    """
-    key_cols = key_cols or KEY_COLS
-    payload = [c for c in df.columns if c not in key_cols]
-    packed = F.struct(*[F.col(c) for c in payload])
-    salt = F.pmod(F.xxhash64(F.col(order_col)), F.lit(n_salts)).alias("_salt")
-    phase1 = (
-        df.withColumn("_salt", salt)
-        .groupBy(*key_cols, "_salt")
-        .agg(F.max_by(packed, F.col(order_col)).alias("_p"))
-    )
-    phase2 = phase1.groupBy(*key_cols).agg(
-        F.max_by(F.col("_p"), F.col(f"_p.{order_col}")).alias("_p")
-    )
-    return phase2.select(*key_cols, *[F.col(f"_p.{c}").alias(c) for c in payload])
-
-
-def salted_repartition(df: DataFrame, key_cols: list[str], n_salts: int = 8) -> DataFrame:
-    """Repartition by (key, salt) to spread a hot key across tasks before a
-    per-row-expensive stage (e.g. the extraction UDF). The salt never enters
-    any join/ON condition — partition pruning keys stay intact
-    (SURVEY.md §4 caveat).
-    """
-    salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salts))
-    return (
-        df.withColumn("_salt", salt)
-        .repartition(*[F.col(c) for c in key_cols], F.col("_salt"))
-        .drop("_salt")
-    )

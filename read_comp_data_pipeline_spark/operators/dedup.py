@@ -925,17 +925,6 @@ def simhash_sql(
     """
 
 
-def simhash_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Documents sharing a simhash bucket → near-dup groups (hamming-0).
-    For hamming ≤ k neighbor search use :func:`simhash_hamming_pairs`."""
-    s = simhash(df, text_col, id_col)
-    return (
-        s.groupBy("simhash")
-        .agg(F.min("id").alias("keeper_id"), F.count("*").alias("group_size"))
-        .where(F.col("group_size") > 1)
-    )
-
-
 def _hamming_blocks(bits: int, max_hamming: int) -> list[tuple[int, int]]:
     """(shift, width) per block, splitting ``bits`` into max_hamming+1
     near-equal blocks. Pigeonhole: two fingerprints within hamming k agree

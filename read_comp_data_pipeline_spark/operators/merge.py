@@ -162,6 +162,19 @@ def atomic_write(path: str, data: str | bytes) -> None:
     os.replace(tmp, path)
 
 
+def parquet_rows(directory: str) -> int:
+    """Rows in the parquet files directly under a just-written directory,
+    from their footers via pyarrow — no Spark job, no data read (the same
+    way Iceberg serves counts from manifest stats)."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(os.path.join(directory, f)).metadata.num_rows
+        for f in os.listdir(directory)
+        if f.endswith(".parquet")
+    )
+
+
 def same_content(a: dict[str, Any], b: dict[str, Any]) -> bool:
     """Whether two snapshot-like dicts name the same table rows: same
     ``epoch``, ``timeline`` and ``content_rev``. An epoch commit moves the
@@ -352,14 +365,16 @@ class HashMergeTable:
     """A key-partitioned MERGE target with atomic snapshot commits.
 
     Concurrency contract: ONE writer per table (the engine's ingest loop).
-    Commits are crash-atomic (snapshot file then pointer swing) but not
-    compare-and-swap — two concurrent writers could both write version
-    N+1 and the second pointer swing would win, silently dropping the
-    first commit. That is the documented trade of plain-filesystem
-    metadata; on a real catalog the swap point is Iceberg's optimistic
-    CAS commit, which turns the race into a retryable
-    CommitFailedException. Readers are unlimited: they resolve
-    one pointer read and only ever see fully-committed snapshots.
+    Commits are crash-atomic (snapshot file then pointer swing) and
+    fenced: a commit refuses unless CURRENT still names the snapshot it
+    was built on, so a writer that lost a race to another handle raises
+    instead of silently dropping the other's commit. The check and the
+    swing are two filesystem steps, not a compare-and-swap, so two
+    writers racing inside that gap can still both pass it; on a real
+    catalog the swap point is Iceberg's optimistic CAS commit, which
+    turns the race into a retryable CommitFailedException. Readers are
+    unlimited: they resolve one pointer read and only ever see
+    fully-committed snapshots.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -457,11 +472,28 @@ class HashMergeTable:
         does not list it, and orphan data files are vacuumable. A crash
         after it means the commit fully happened. This ordering is the
         exactly-once foundation (SURVEY.md §2.9).
+
+        Writer fencing: ``snap["version"]`` is the base the commit was
+        built on, and CURRENT must still name it (no CURRENT for
+        :meth:`create`'s version -1). A second writer that committed in
+        between makes this one refuse instead of silently losing its commit.
         """
+        self._check_base(snap["version"])
         snap["version"] += 1
         name = f"snap-{snap['version']:08d}.json"
         atomic_write(os.path.join(self.path, "snapshots", name), json.dumps(snap))
         atomic_write(os.path.join(self.path, _STAGING if stage else _CURRENT), name)
+
+    def _check_base(self, version: int) -> None:
+        """Refuse a commit unless CURRENT names snapshot ``version`` (or is
+        absent, for ``version`` -1)."""
+        expected = f"snap-{version:08d}.json" if version >= 0 else None
+        found = self._pointer(_CURRENT)
+        if found != expected:
+            raise ValueError(
+                f"commit built on {expected or 'no snapshot'} but CURRENT names "
+                f"{found or 'no snapshot'}: another writer committed first"
+            )
 
     # -- properties -----------------------------------------------------------
 
@@ -1290,23 +1322,13 @@ class HashMergeTable:
 
     def _written_bucket_counts(self, out_path: str) -> dict[int, int]:
         """Per-bucket row counts of a just-written bucket-partitioned dir,
-        from parquet footers via pyarrow — no Spark job, no data read (the
-        same way Iceberg serves counts from manifest stats). Keeps the hot
-        ingest path at exactly one Spark job per epoch."""
-        import pyarrow.parquet as pq
-
-        counts: dict[int, int] = {}
-        for name in os.listdir(out_path):
-            if not name.startswith("_b="):
-                continue
-            b = int(name.split("=", 1)[1])
-            total = 0
-            bdir = os.path.join(out_path, name)
-            for f in os.listdir(bdir):
-                if f.endswith(".parquet"):
-                    total += pq.ParquetFile(os.path.join(bdir, f)).metadata.num_rows
-            counts[b] = total
-        return counts
+        from parquet footers (:func:`parquet_rows`). Keeps the hot ingest
+        path at exactly one Spark job per epoch."""
+        return {
+            int(name.split("=", 1)[1]): parquet_rows(os.path.join(out_path, name))
+            for name in os.listdir(out_path)
+            if name.startswith("_b=")
+        }
 
     def compact_table(self) -> dict[str, Any]:
         """Maintenance compaction (mor mode): fold all deltas into the base
@@ -1704,6 +1726,7 @@ class HashMergeTable:
         staged = self.staged_snapshot()
         if staged is None:
             raise ValueError("no staged snapshot to publish")
+        self._check_base(int(staged["version"]) - 1)
         name = f"snap-{staged['version']:08d}.json"
         atomic_write(os.path.join(self.path, _CURRENT), name)
         os.remove(os.path.join(self.path, _STAGING))

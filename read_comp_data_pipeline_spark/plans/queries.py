@@ -1294,7 +1294,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_hamming_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash hamming ≤ 2 neighbor pairs via bit-block banding (pigeonhole
     over 3 disjoint bit blocks → bucket joins, exact popcount verify) —
-    the near-dup search simhash_dup_groups' hamming-0 grouping can't do.
+    the near-dup search a hamming-0 grouping of equal fingerprints can't do.
     At 64 bits only true near-dups survive (7 pairs at sf0.01 vs 11,639
     at the old 16-bit width — the candidate set was ~9% of all pairs)."""
     return simhash_hamming_pairs(

@@ -41,7 +41,7 @@ KEY_COLS = ["repo", "path"]
 
 # ---------------------------------------------------------------------------
 # Target table (FIXTURES.md §4): input columns + extraction fields computed
-# by the vectorized UDFs (title/heading/text — the reference's metadata
+# by Column expressions (title/heading/text — the reference's metadata
 # dict + breadcrumb rows, scrape.py:113-121 / search_scrape.py:434-620)
 # + the sha256 per-row invariant (input_hint).
 # ---------------------------------------------------------------------------

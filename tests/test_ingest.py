@@ -11,10 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from read_comp_data_pipeline_spark.operators.compact import (
-    compact_latest,
-    compact_latest_salted,
-)
+from read_comp_data_pipeline_spark.operators.compact import compact_latest
 from read_comp_data_pipeline_spark.operators.merge import HashMergeTable
 from read_comp_data_pipeline_spark.sources.wal import (
     expected_final_state,
@@ -73,8 +70,6 @@ def test_compaction_matches_window_oracle(spark, wal_path):
     expected = expected_final_state(wal)  # window row_number implementation
     got = compact_latest(wal).where(F.col("op") != "D")
     assert _state_digest(got) == _state_digest(expected)
-    got_salted = compact_latest_salted(wal).where(F.col("op") != "D")
-    assert _state_digest(got_salted) == _state_digest(expected)
     got_hash = compact_latest(wal, strategy="broadcast_hash_semi").where(F.col("op") != "D")
     assert _state_digest(got_hash) == _state_digest(expected)
 
